@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftglue.Bus
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Dev-only order-alternating in-JVM A/B runner (the r15 protocol fix:
@@ -12,9 +13,11 @@ import java.util.concurrent.atomic.AtomicInteger
   *
   * Runs each rep pair in alternating order (A,B / B,A / ...), times the
   * noop-sink write (construction + execution — ckpt chains execute at
-  * construction), counts Spark jobs per run via a listener, and prints
-  * per-query medians. The conf key is set on the session before each
-  * variant's construction so conf-gated code paths toggle per run.
+  * construction), counts Spark jobs per run via a listener (its bus
+  * drained before every read, so the counts are exact), and prints
+  * per-query medians of both. The conf key is set on the session
+  * before each variant's construction so conf-gated code paths toggle
+  * per run.
   */
 object AB {
   def main(args: Array[String]): Unit = {
@@ -39,13 +42,13 @@ object AB {
     def runOnce(name: String, v: String): (Double, Int) = {
       spark.conf.set(confKey, v)
       val preexisting = spark.sparkContext.getPersistentRDDs.keySet
+      Bus.drain(spark.sparkContext)
       val j0 = jobs.get()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      // brief settle so async job-start events land before we read
-      Thread.sleep(50)
+      Bus.drain(spark.sparkContext)
       val nj = jobs.get() - j0
       spark.sparkContext.getPersistentRDDs
         .filterNot { case (id, _) => preexisting(id) }
@@ -53,24 +56,23 @@ object AB {
       (sec, nj)
     }
 
-    def med(xs: Seq[Double]): Double = {
+    def med[N: Ordering](xs: Seq[N]): N = {
       val s = xs.sorted; s(s.length / 2)
     }
 
     queries.foreach { name =>
       // one unmeasured warm run per variant (codegen compile)
       runOnce(name, valA); runOnce(name, valB)
-      val ta = scala.collection.mutable.ArrayBuffer[Double]()
-      val tb = scala.collection.mutable.ArrayBuffer[Double]()
-      var ja = 0; var jb = 0
+      val ra = scala.collection.mutable.ArrayBuffer[(Double, Int)]()
+      val rb = scala.collection.mutable.ArrayBuffer[(Double, Int)]()
       (0 until reps).foreach { r =>
         val order = if (r % 2 == 0) Seq(valA, valB) else Seq(valB, valA)
         order.foreach { v =>
-          val (sec, nj) = runOnce(name, v)
-          if (v == valA) { ta += sec; ja = nj } else { tb += sec; jb = nj }
+          (if (v == valA) ra else rb) += runOnce(name, v)
         }
       }
-      val ma = med(ta.toSeq); val mb = med(tb.toSeq)
+      val ma = med(ra.map(_._1).toSeq); val mb = med(rb.map(_._1).toSeq)
+      val ja = med(ra.map(_._2).toSeq); val jb = med(rb.map(_._2).toSeq)
       println(f"[ab] $name%-28s $confKey=$valA%-6s ${ma}%7.3f s ($ja jobs)  " +
         f"$confKey=$valB%-6s ${mb}%7.3f s ($jb jobs)  B/A=${mb / ma}%5.3f")
     }

@@ -118,10 +118,10 @@ object Bench {
     // cpus/parallelism: the driver's scaling probe flagged
     // `suspect_cpus_ignored` in r15 because nothing in the output PROVED
     // the env var reached the master string. Emit both so the harness can
-    // verify instead of suspect: cpus echoes SPARK_GRAFT_CPUS as consumed,
-    // parallelism is the live scheduler's defaultParallelism (local[N] ⇒ N).
-    val envJson =
-      s""""cpus":$cpus,"parallelism":${spark.sparkContext.defaultParallelism}"""
+    // verify instead of suspect: cpus is SPARK_GRAFT_CPUS resolved to the
+    // session's core count, parallelism is the live scheduler's
+    // defaultParallelism (local[N] ⇒ N).
+    val envJson = Bench.envJson(cpus, spark.sparkContext.defaultParallelism)
     def render(entries: Seq[(String, Double)], omitted: Int): String = {
       val qs = entries.sortBy(_._1)
         .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + ms3(v) }
@@ -152,4 +152,11 @@ object Bench {
     println(line)
     spark.stop()
   }
+
+  /** The line's `"cpus"` / `"parallelism"` fields. `cpus` is the
+    * SPARK_GRAFT_CPUS spec resolved by [[Sessions.coresOf]]: spliced
+    * verbatim, a valid spec such as `*` or `8,4` made the line invalid
+    * JSON. */
+  private[graft] def envJson(cpus: String, parallelism: Int): String =
+    s""""cpus":${Sessions.coresOf(cpus)},"parallelism":$parallelism"""
 }

@@ -903,8 +903,11 @@ object DedupQueries {
         // already wide, AQE no longer under-parallelizes, and the same
         // repartition measured PURE LOSS (+15 s) — the fan-out fires
         // exactly when natural parallelism is below the core count,
-        // at any SF, with no constant tuned to either.
-        val fanOut = fuse &&
+        // at any SF, with no constant tuned to either. With checkpoints
+        // disabled (full-plan audit) docs is an unexecuted plan: its
+        // partition count means nothing and `.rdd` would run its
+        // shuffle stages, so the probe is skipped there.
+        val fanOut = fuse && !graft.Ckpt.disabled &&
           docs.rdd.getNumPartitions < s.sparkContext.defaultParallelism
         val candsR =
           if (fanOut) cands.repartition(

@@ -475,12 +475,13 @@ object SimilarityQueries {
         expr("l2_normalize(embedding)").as("v"))
 
   /** Shared by q204 (spectrum) and q209 (ABTT re-rank): the
-    * dim-exploded corpus, round-9 per-dim means, the round-9
-    * covariance cells, and the top principal component after three
-    * power-iteration supersteps. ONE definition so the re-ranker
-    * provably removes the exact component q204 reports — a drifted
-    * copy would silently desynchronize the two. Determinism/scale
-    * contract documented at q204.
+    * dim-exploded corpus, round-9 per-dim means, and the top principal
+    * component of the round-9 covariance after three power-iteration
+    * steps, as the 64-row relation `(i, v, lambda_r)` (loading per
+    * dimension, the round-6 Rayleigh quotient repeated). ONE definition
+    * so the re-ranker provably removes the exact component q204
+    * reports — a drifted copy would silently desynchronize the two.
+    * Determinism/scale contract documented at q204.
     */
   private def pcaParts(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val dims = Tables(s, dir).embeddings
@@ -505,20 +506,17 @@ object SimilarityQueries {
       .join(mu.select(col("i").as("j"), col("mu").as("mj")), "j")
       .select(col("i"), col("j"),
         round(col("exy") - col("mi") * col("mj"), 9).as("g"))
-      .ckpt() // feeds all three iterations + Rayleigh
-    def mult(v: org.apache.spark.sql.DataFrame) =
-      gram.join(v.select(col("i").as("j"), col("v")), "j")
-        .groupBy(col("i")).agg(sum(col("g") * col("v")).as("w"))
-    def normalize(w: org.apache.spark.sql.DataFrame) = {
-      val nrm = w.agg(round(sqrt(sum(col("w") * col("w"))), 9).as("nrm"))
-      w.crossJoin(broadcast(nrm))
-        .select(col("i"), round(col("w") / col("nrm"), 9).as("v"))
-        .ckpt() // superstep barrier: d rows
-    }
-    val v0 = s.range(0, 64)
-      .select(col("id").cast("int").as("i"), lit(0.125).as("v"))
-    val v3 = normalize(mult(normalize(mult(normalize(mult(v0))))))
-    (dims, mu, gram, mult _, v3)
+      // barrier: the build keeps its own parallelism instead of being
+      // pulled into the single task of the coalesce(1) below
+      .ckpt()
+    // d² = 4,096 cells: the whole power iteration runs in ONE task,
+    // with no exchange (graft.functions.PowerIteration)
+    val power = graft.functions.PowerIteration.udaf(64, 3)
+    val v3 = gram.coalesce(1)
+      .agg(power(col("i"), col("j"), col("g")).as("pc"))
+      .select(posexplode(col("pc.v")).as(Seq("i", "v")),
+        col("pc.lambda_r").as("lambda_r"))
+    (dims, mu, v3)
   }
 
   /** DuckDB restatement of [[pcaParts]] (dims → mu → gram → v3),
@@ -2372,7 +2370,7 @@ object SimilarityQueries {
 
     // ------------------------------------------------------------------
     // q204: top principal component of the embedding corpus via THREE
-    // power-iteration supersteps on the covariance matrix — the
+    // power-iteration steps on the covariance matrix — the
     // embedding-space analysis primitive behind whitening, ABTT
     // ("all-but-the-top" anisotropy removal), and drift monitoring:
     // a corpus whose top eigenvalue dominates is anisotropic and
@@ -2382,23 +2380,24 @@ object SimilarityQueries {
     //      self-join on vec_id, (i,j)-keyed partial-agg average; the
     //      shuffle is d² = 4,096 cells no matter how many vectors.
     //      This is the ONLY data-sized stage.
-    //   2. power iteration: G·v / ‖G·v‖ three times, each a d²-row
-    //      join + d-row aggregate — bounded supersteps on a bounded
-    //      relation (the q101/q199 discipline; no driver-side math).
+    //   2. power iteration: ONE bounded step in ONE task — a typed
+    //      aggregate assembles the d² checkpointed cells by index and
+    //      runs G·v / ‖G·v‖ three times plus the Rayleigh quotient in
+    //      a local loop (no driver-side math, no per-step barrier:
+    //      as three checkpointed d²-row join + d-row aggregate
+    //      supersteps the query ran 38 Spark jobs at sf0.001, now 9).
     //
     // Determinism: covariance entries round at 9 (the avg's summation
     // -order slack is ~1e-13); each iterate renormalizes with a
-    // round-9 norm and re-rounds at 9, so both engines walk the same
-    // quantized trajectory from the exact-binary start v0 = 0.125·1;
-    // the reported loadings and Rayleigh quotient λ = v·Gv round at 6.
+    // round-9 norm and re-rounds at 9, every sum in ascending index
+    // order, so both engines walk the same quantized trajectory from
+    // the exact-binary start v0 = 0.125·1; the reported loadings and
+    // Rayleigh quotient λ = v·Gv round at 6.
     QDef(
       "q204_pca_power",
       (s, dir) => {
-        val (_, _, _, mult, v3) = pcaParts(s, dir)
-        val lam = mult(v3).join(v3, "i")
-          .agg(round(sum(col("w") * col("v")), 6).as("lambda_r"))
-        v3.crossJoin(broadcast(lam))
-          .select(col("i"), round(col("v"), 6).as("loading_r"),
+        val (_, _, v3) = pcaParts(s, dir)
+        v3.select(col("i"), round(col("v"), 6).as("loading_r"),
             col("lambda_r"))
           .orderBy(col("i"))
       },
@@ -2436,7 +2435,7 @@ object SimilarityQueries {
     QDef(
       "q209_abtt_rerank",
       (s, dir) => {
-        val (dims, mu, _, _, v3) = pcaParts(s, dir)
+        val (dims, mu, v3) = pcaParts(s, dir)
         val centered = dims
           .join(broadcast(mu), "i")
           .join(broadcast(v3.select(col("i"), col("v").as("pc"))), "i")

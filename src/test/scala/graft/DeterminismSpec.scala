@@ -19,9 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * invariance both still proven), queries run on a small thread pool
   * (guide §2.6 — per-query Spark jobs at sf0.001 are latency-bound,
   * so overlapping them fills the idle slots), the partition-7 run
-  * rides a CLONED session (own SQLConf — no global conf mutation
-  * racing the pool), and each query's checkpoint blocks are released
-  * eagerly (the round-7 block-manager-pressure finding).
+  * rides a fresh session (`newSession()`: its own SQLConf built from
+  * the builder-time conf only — runtime `conf.set`s on the base session
+  * are NOT carried over — so no global conf mutation races the pool),
+  * and each query's checkpoint blocks are released eagerly (the
+  * round-7 block-manager-pressure finding).
   */
 class DeterminismSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

@@ -98,10 +98,6 @@ class PlanQualitySpec extends AnyFunSuite {
     // q203 crossJoins the ONE-row day-series mean and the ONE-row ACF
     // denominator (q37 pattern); the lag join itself is an equi-join
     "q203_daily_acf",
-    // q204 crossJoins the ONE-row norm / Rayleigh aggregates between
-    // power-iteration supersteps (q37 pattern); the covariance build
-    // and G·v products are equi-joins on vec_id / dimension index
-    "q204_pca_power",
     // q208 crossJoins the ONE-row exact-totals aggregate into the
     // ONE-row HT-estimate aggregate (q37 pattern)
     "q208_ht_estimate",

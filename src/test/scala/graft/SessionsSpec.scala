@@ -41,6 +41,17 @@ class SessionsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Sessions.coresOf(""))
   }
 
+  test("Bench's cpus field is valid JSON for every SPARK_GRAFT_CPUS form") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    Seq("4", "*", "8,4").foreach { spec =>
+      val line = s"""{"metric":"total",${Bench.envJson(spec, 4)}}"""
+      val node = json.readTree(line) // throws on invalid JSON
+      assert(node.get("cpus").isInt, line)
+      assert(node.get("cpus").asInt == Sessions.coresOf(spec), line)
+      assert(node.get("parallelism").asInt == 4, line)
+    }
+  }
+
   test("derivedShufflePartitions measures a real directory") {
     val dir = TestSpark.tmpDir("sessions-sizing")
     val f = new java.io.File(dir, "blob.bin")

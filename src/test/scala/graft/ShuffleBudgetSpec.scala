@@ -412,9 +412,11 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // mean crossJoin + the lag equi-join/agg over the ≤365-day series
     "q203_daily_acf" -> 3,
     // q204: covariance build behind the checkpoint (its d²-cell agg is
-    // the one data-sized shuffle, run once); visible: the last
-    // superstep's d²-row join/agg + the one-row Rayleigh/norm
-    "q204_pca_power" -> 4,
+    // the one data-sized shuffle, run once); visible: the power
+    // iteration, one aggregate over the coalesce(1)'d d² cells in a
+    // single task, and the 64-row sort on that one partition — nothing
+    // left to exchange
+    "q204_pca_power" -> 0,
     // q205: propagation rounds checkpoint per superstep; visible: the
     // ≤|labels| community-size agg feeding sort+limit
     "q205_label_prop" -> 1,
