@@ -18,6 +18,12 @@ import java.util.concurrent.atomic.AtomicInteger
   * per-query medians of both. The conf key is set on the session
   * before each variant's construction so conf-gated code paths toggle
   * per run.
+  *
+  * An experiment key lives for one round: a change under test may read
+  * a temporary conf key so both formulations run in one binary, and
+  * once the A/B decision is recorded (OPTIMIZATION_rN.md) the key and
+  * the losing code path are deleted. No such key exists today; the
+  * runner also toggles stock Spark keys.
   */
 object AB {
   def main(args: Array[String]): Unit = {
@@ -39,22 +45,18 @@ object AB {
         jobs.incrementAndGet()
     })
 
-    def runOnce(name: String, v: String): (Double, Int) = {
-      spark.conf.set(confKey, v)
-      val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-      Bus.drain(spark.sparkContext)
-      val j0 = jobs.get()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Bus.drain(spark.sparkContext)
-      val nj = jobs.get() - j0
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .valuesIterator.foreach(_.unpersist(blocking = false))
-      (sec, nj)
-    }
+    def runOnce(name: String, v: String): (Double, Int) =
+      Ckpt.releasingNew(spark.sparkContext) {
+        spark.conf.set(confKey, v)
+        Bus.drain(spark.sparkContext)
+        val j0 = jobs.get()
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        val sec = (System.nanoTime() - t0) / 1e9
+        Bus.drain(spark.sparkContext)
+        (sec, jobs.get() - j0)
+      }
 
     def med[N: Ordering](xs: Seq[N]): N = {
       val s = xs.sorted; s(s.length / 2)

@@ -25,40 +25,22 @@ object Bench {
     val unknown = wanted -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     def timeOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // snapshot persisted-RDD ids BEFORE the query: only blocks this
-      // query created are released afterwards, so a localCheckpointed
-      // RDD held by a caller sharing the session (whose truncated
-      // lineage cannot be recomputed) is never yanked out from under
-      // it. With the ids scoped, the eager release stays safe even if
-      // plans are one day reused across queries.
-      val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      // noop sink: forces full materialization of every output column
-      // (count() would let Spark skip column evaluation entirely).
-      val r = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          // -1 sentinel in the JSON (plus stderr): a failed query must
-          // read as a FAILURE, not as a fast successful run.
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          -1.0
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      Ckpt.releasingNew(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        // noop sink: forces full materialization of every output column
+        // (count() would let Spark skip column evaluation entirely).
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch {
+          case e: Throwable =>
+            // -1 sentinel in the JSON (plus stderr): a failed query must
+            // read as a FAILURE, not as a fast successful run.
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            -1.0
+        }
       }
-      // Release the finished query's localCheckpoint/cache blocks
-      // eagerly: they otherwise accumulate across the whole
-      // multi-hundred-query session until GC happens to drop the last
-      // plan reference, and the block-manager pressure taxes every later
-      // query (+15-25% on unchanged queries in the round-6 bench —
-      // the round-7 attribution measurement in PROGRESS.jsonl).
-      // Safe between queries: results are fully materialized and no
-      // plan is reused across entries.
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .valuesIterator.foreach(_.unpersist(blocking = false))
-      r
-    }
     def pass(): Map[String, Double] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => wanted.isEmpty || wanted(n) }

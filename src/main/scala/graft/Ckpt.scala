@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Dataset
 
 /** The ONE lineage-cut primitive every query/sink uses in place of a
@@ -22,23 +23,17 @@ import org.apache.spark.sql.Dataset
   * flag; it is test-only, flipped under try/finally by the audit spec
   * (suites run sequentially in the forked test JVM, so the global is
   * race-free there).
+  *
+  * A cheap derived relation whose own materialization job costs more
+  * than recomputing it inside its one consumer (the BPE argmax row of
+  * q247/q248) is left un-checkpointed at its call site; JobBudgetSpec
+  * pins those job counts.
   */
 object Ckpt {
   /** Test-only: when true, [[CkptOps.ckpt]] returns the dataset
     * unchanged so full plans stay inspectable.
     */
   @volatile var disabled: Boolean = false
-
-  /** Barrier fusion (r16, guide §2.6/§5 — superstep chains burn most
-    * of their wall clock in per-barrier job latency, not work): when
-    * on (default), [[CkptOps.fuseCkpt]] skips the checkpoint so the
-    * relation is computed inside its consumers' jobs instead of paying
-    * a separate materialization job per superstep.
-    * `spark.graft.fuse=false` restores the r15 one-barrier-per-step
-    * shape — the A/B switch.
-    */
-  private[graft] def fuseOn(s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.getOption("spark.graft.fuse").forall(_ == "true")
 
   implicit final class CkptOps[T](private val ds: Dataset[T])
       extends AnyVal {
@@ -60,18 +55,28 @@ object Ckpt {
     /** `localCheckpoint(eager)` unless the audit flag is on. */
     def ckpt(eager: Boolean): Dataset[T] =
       if (disabled) ds else ds.localCheckpoint(eager)
+  }
 
-    /** Barrier elision for cheap DERIVED relations (argmax rows, small
-      * per-step picks) whose separate materialization job costs more
-      * than recomputing them inside each consumer: identity when
-      * fusion is on (default — the consumer's job computes the
-      * subtree, typically once via the broadcast build), `ckpt()`
-      * when `spark.graft.fuse=false`. Only safe when the relation is
-      * deterministic and cheap to recompute from its own checkpointed
-      * inputs — results are identical either way, only the job count
-      * changes.
-      */
-    def fuseCkpt(): Dataset[T] =
-      if (Ckpt.fuseOn(ds.sparkSession)) ds else ds.ckpt()
+  /** Run `body`, then release the checkpoint/cache blocks it created.
+    *
+    * The persisted-RDD ids are snapshotted BEFORE `body`, and only RDDs
+    * absent from that snapshot are unpersisted afterwards (in `finally`,
+    * so a failed query releases too): a localCheckpointed RDD held by a
+    * caller sharing the session has truncated lineage and cannot be
+    * recomputed, so its blocks must survive. Without the eager release
+    * a long session's finished queries accumulate blocks until GC drops
+    * the last plan reference, and the block-manager pressure taxes
+    * every later query (+15-25 % on unchanged queries in the round-6
+    * bench). Never run two of these concurrently on one context: each
+    * would see the other's in-flight checkpoints as "new" and release
+    * them mid-query. A body may fan out internally (DeterminismSpec's
+    * pool waves): the release then happens once, after the whole wave.
+    */
+  def releasingNew[A](sc: SparkContext)(body: => A): A = {
+    val preexisting = sc.getPersistentRDDs.keySet
+    try body
+    finally sc.getPersistentRDDs
+      .filterNot { case (id, _) => preexisting(id) }
+      .valuesIterator.foreach(_.unpersist(blocking = false))
   }
 }

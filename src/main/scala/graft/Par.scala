@@ -3,9 +3,9 @@ package graft
 /** Build independent EAGER relations concurrently.
   *
   * Multi-arm compositions (q279 = dedup-mass × Shapley × DoReMi,
-  * q270 = clusters × Shapley, q121 = signatures × exact ground truth)
-  * chain `ckpt()` barriers inside each arm, and a ckpt executes its
-  * upstream stages at query-CONSTRUCTION time. Built sequentially,
+  * q281 = signatures × exact Jaccard ground truth) chain `ckpt()`
+  * barriers inside each arm, and a ckpt executes its upstream stages
+  * at query-CONSTRUCTION time. Built sequentially,
   * every arm's superstep tail leaves the rest of the machine idle;
   * Spark's scheduler happily runs the arms' jobs at once (optimization
   * guide §2.6 — "overlap independent jobs": FIFO scheduling back-fills
@@ -18,6 +18,12 @@ package graft
   * result. Failures rethrow the first arm error. Threads are daemon
   * (a failed build can't pin the JVM) and the pool is unbounded but
   * short-lived per call — arms number ≤3 in every caller.
+  *
+  * Arms always overlap. The round-15 order-alternating A/B against
+  * sequential construction measured 0.69× (q279) and 0.68× (q281) of
+  * the sequential wall time (OPTIMIZATION_r15.md, "Par overlap"), so no
+  * sequential fallback is kept; q270/q121/q256, where the overlap lost,
+  * build their arms sequentially without this helper.
   */
 object Par {
   // FRESH daemon threads per invocation, never a pool: Spark stashes
@@ -58,23 +64,13 @@ object Par {
     result
   }
 
-  /** `spark.graft.par=false` degrades both helpers to plain sequential
-    * evaluation on the caller thread — the A/B switch that lets a
-    * bench session measure the overlap itself, with zero plan change.
-    */
-  private def parallelOk: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .forall(_.conf.getOption("spark.graft.par").forall(_ == "true"))
-
   def par2[A, B](a: => A, b: => B): (A, B) = {
-    if (!parallelOk) return (a, b)
     val ta = new Arm(a); val tb = new Arm(b)
     ta.start(); tb.start()
     awaitAll(Seq(ta, tb), (ta.await(), tb.await()))
   }
 
   def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    if (!parallelOk) return (a, b, c)
     val ta = new Arm(a); val tb = new Arm(b); val tc = new Arm(c)
     ta.start(); tb.start(); tc.start()
     awaitAll(Seq(ta, tb, tc), (ta.await(), tb.await(), tc.await()))

@@ -1,10 +1,9 @@
 package graft
 
-/** Dump `.explain("formatted")` for the given queries to files — the
-  * per-round plan-evidence artifact (plans/r{N}/<q>_{before,after}.txt).
-  * The r16 optimizations are all gated on `spark.graft.fuse`, so BOTH
-  * shapes come from one binary: `before` = fuse off (the r15 plan),
-  * `after` = fuse on (default).
+/** Dump `.explain("formatted")` for the given queries (every query when
+  * none is named) to files — the per-round plan-evidence artifact
+  * (plans/r{N}/<q>_{before,after}.txt). A before/after pair comes from
+  * two commits: run the dump once on each with its own suffix.
   *
   * A change that lives INSIDE a checkpointed sub-plan is invisible to
   * the production dump (the ckpt renders as Scan ExistingRDD — the r15
@@ -13,14 +12,15 @@ package graft
   * so the sub-plan shapes are directly visible. Nothing executes in
   * that mode.
   *
-  * usage: runMain graft.PlanDump <outDir> <suffix> <fuse> <sfDir> q...
+  * usage: runMain graft.PlanDump <outDir> <suffix> <sfDir> [q...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val Array(outDir, suffix, fuse, sfDir) = args.take(4)
-    val names = args.drop(4)
+    val Array(outDir, suffix, sfDir) = args.take(3)
+    val named = args.drop(3).toSeq
+    val names =
+      if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
     val spark = Sessions.localSized("graft-plandump", "32", sfDir)
-    spark.conf.set("spark.graft.fuse", fuse)
     if (suffix.startsWith("full_")) Ckpt.disabled = true
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>

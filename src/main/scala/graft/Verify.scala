@@ -17,21 +17,13 @@ object Verify {
     SparkEntry.queries
       .filter { case (n, _) => wanted.isEmpty || wanted(n) }
       .foreach { case (name, fn) =>
-      // ids snapshot: release only blocks THIS query created (see
-      // Bench's comment — a shared caller's checkpointed RDD must not
-      // lose its uncomputable blocks)
-      val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      Ckpt.releasingNew(spark.sparkContext) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-      // free the finished query's localCheckpoint/cache blocks — the
-      // same eager release Bench does (see its comment); every query's
-      // worth of accumulated blocks otherwise taxes the tail of the run
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .valuesIterator.foreach(_.unpersist(blocking = false))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

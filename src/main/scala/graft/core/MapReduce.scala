@@ -158,12 +158,18 @@ object MapReduce {
     outLines.result()
   }
 
-  /** Shared scan+map stage: one map task per input file
-    * (master.go:289-296), Map called with the caller's ORIGINAL path
+  /** Shared scan+map stage, Map called with the caller's ORIGINAL path
     * string — the reference hands Map the CLI argument verbatim
     * (mrsequential.go:49), while wholeTextFiles absolutizes, so resolved
     * paths are mapped back. Used by both the exact-layout runner and the
     * Catalyst-planned MRAggregators.runDataset.
+    *
+    * Task granularity differs from the reference's one map task per
+    * input file (master.go:289-296): `inputs.size` is only a minimum
+    * split hint, and wholeTextFiles packs small files into shared
+    * splits, so a map task covers a split of ONE OR MORE whole files
+    * (24 small files give 16-17 map tasks). A file is never divided,
+    * but a task retry re-runs Map over every file in its split.
     */
   def mapStage(
       spark: SparkSession,

@@ -858,7 +858,6 @@ object DedupQueries {
         // 2.3 s) and 100× (per-element UTF8String compares lose to the
         // codegen'd hash-set path). The verify win that stands is the
         // conditional fan-out below.
-        val fuse = graft.Ckpt.fuseOn(s)
         val docs = sh.join(dfreq, "g")
           .groupBy(col("doc_id"))
           .agg(sort_array(collect_list(struct(col("df"), col("g"))))
@@ -907,7 +906,7 @@ object DedupQueries {
         // disabled (full-plan audit) docs is an unexecuted plan: its
         // partition count means nothing and `.rdd` would run its
         // shuffle stages, so the probe is skipped there.
-        val fanOut = fuse && !graft.Ckpt.disabled &&
+        val fanOut = !graft.Ckpt.disabled &&
           docs.rdd.getNumPartitions < s.sparkContext.defaultParallelism
         val candsR =
           if (fanOut) cands.repartition(

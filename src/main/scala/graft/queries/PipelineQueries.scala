@@ -449,13 +449,11 @@ object PipelineQueries {
         expr("element_at(split(m.p, ' '), 2)").as("r"),
         expr("replace(m.p, ' ', '')").as("merged"),
         (-col("m.nc")).as("cnt"))
-      // r16 barrier fusion (guide §2.6/§5): the 1-row argmax pays its
-      // own eager-ckpt job per superstep (8 per BPE query) unless
-      // fused — elided, the pair-count agg runs inside applyMerge's
-      // broadcast BUILD instead (same work, one fewer job per step).
-      // Per-callsite, see the fuseBest scaladoc; spark.graft.fuse=false
-      // restores the barrier everywhere (the A/B switch).
-      .transform(d => if (fuseBest) d.fuseCkpt() else d.ckpt())
+      // The 1-row argmax pays its own eager-ckpt job per superstep
+      // (8 per BPE query) unless elided: then the pair-count agg runs
+      // inside applyMerge's broadcast BUILD instead (same work, one
+      // fewer job per step). Per-callsite, see the fuseBest scaladoc.
+      .transform(d => if (fuseBest) d else d.ckpt())
     (best, applyMerge(vocab, best))
   }
 
@@ -4140,9 +4138,9 @@ object PipelineQueries {
     // q256: tokenizer OOV-generalization audit — the APPLY path of the
     // q246 trainer, on data it never saw: merges are learned on the
     // TRAIN split only (the SHARED q51 splitExpr), then applied to the
-    // HELD-OUT split's word vocabulary through the SAME applyMerge
-    // fold the trainer uses (one definition — the apply path cannot
-    // drift from training semantics). Because the synthetic corpus'
+    // HELD-OUT split's word vocabulary through the SAME mergeFoldSql
+    // fold the trainer's applyMerge uses (one definition — the apply
+    // path cannot drift from training semantics). Because the synthetic corpus'
     // word vocabulary is closed, genuine OOV is INJECTED as ground
     // truth (the q218 discipline): a deterministic md5 coin doubles
     // the first character of ~1/8 of held-out word INSTANCES (0-based
@@ -4181,7 +4179,7 @@ object PipelineQueries {
                then concat(substring(w0, 1, 1), w0) else w0 end""")
             .as("word"))
           .ckpt() // feeds the held vocab AND the scoring join
-        var hv = hw.groupBy(col("word")).agg(count(lit(1)).as("wf"))
+        val hv0 = hw.groupBy(col("word")).agg(count(lit(1)).as("wf"))
           .select(col("word"), col("wf"),
             expr("""concat(concat_ws(' ',
                      filter(split(word, ''), c -> c <> '')), ' _')""")
@@ -4198,17 +4196,15 @@ object PipelineQueries {
         // sequence (data-driven iteration — no plan-unrolled expression
         // blowup). Result is identical by construction: the fold
         // applies b1..b8 in iter order exactly as the sequential chain
-        // did. `spark.graft.fuse=false` restores the per-step chain.
-        if (graft.Ckpt.fuseOn(s)) {
-          val mergeTab = merges.reduce(_ unionByName _)
-            .agg(sort_array(collect_list(
-              struct(col("iter"), col("l"), col("r")))).as("ms"))
-          hv = hv.crossJoin(broadcast(mergeTab))
-            .select(col("word"), col("wf"),
-              expr(s"""aggregate(ms, rep, (acc0, m) ->
-                         ${mergeFoldSql("acc0", "m.l", "m.r")})""")
-                .as("rep"))
-        } else merges.foreach { b => hv = applyMerge(hv, b) }
+        // did.
+        val mergeTab = merges.reduce(_ unionByName _)
+          .agg(sort_array(collect_list(
+            struct(col("iter"), col("l"), col("r")))).as("ms"))
+        val hv = hv0.crossJoin(broadcast(mergeTab))
+          .select(col("word"), col("wf"),
+            expr(s"""aggregate(ms, rep, (acc0, m) ->
+                       ${mergeFoldSql("acc0", "m.l", "m.r")})""")
+              .as("rep"))
         val tok = hv.select(col("word"),
             expr("cast(size(split(rep, ' ')) as bigint)").as("n_bpe"))
           .join(vocabs.head.select(col("word"),

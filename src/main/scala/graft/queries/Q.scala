@@ -196,7 +196,7 @@ object Q {
     // rank window partitions by (bin, sub, sub2), ~n/10⁹ per task.
     val cand0 = binned.join(broadcast(
       tloc.select(col("bin")).distinct()), Seq("bin"), "left_semi")
-    // NOTE r16: eliding the bstats/tloc2/tloc3 barriers (fuseCkpt, the
+    // NOTE r16: eliding the bstats/tloc2/tloc3 barriers (no ckpt, the
     // BPE-trainer fusion) was tried and REVERTED — the clean
     // order-alternating A/B measured 0.94×/0.95×/0.98× on
     // q180/q148/q211: each tiny relation here has MULTIPLE consumers

@@ -73,23 +73,12 @@ object TextQueries {
     * Returns (merged corpus, the round's report row).
     */
   private def bpeStep(df: org.apache.spark.sql.DataFrame, r: Int) = {
-    // r16: the pair stream comes from the native SentinelPairs
-    // generator — one streaming pass per corpus row instead of
-    // split + transform(sequence)'s token array, struct array, and
-    // per-pair Column machinery (same rows by construction; the
-    // generator's scaladoc carries the equivalence argument).
-    // spark.graft.fuse=false restores the r15 formulation.
-    val pairs =
-      if (graft.Ckpt.fuseOn(df.sparkSession))
-        df.select(graft.functions.SentinelPairs.sentinelPairs(col("s"))
-          .as(Seq("w1", "w2")))
-      else df.select(expr(bpeToks).as("arr"))
-        .where(expr("size(arr) >= 2"))
-        .select(explode(expr(
-          """transform(sequence(1, size(arr) - 1),
-               i -> named_struct('w1', arr[i-1], 'w2', arr[i]))"""))
-          .as("p"))
-        .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
+    // The pair stream comes from the native SentinelPairs generator:
+    // one streaming pass per corpus row, no token array or per-pair
+    // struct (same rows as the split + transform(sequence) form, which
+    // R16ExprSpec keeps as its reference).
+    val pairs = df.select(graft.functions.SentinelPairs.sentinelPairs(
+      col("s")).as(Seq("w1", "w2")))
     val top = pairs
       .groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("cnt"))

@@ -50,17 +50,14 @@ class DeterminismSpec extends AnyFunSuite {
     // see sibling threads' in-flight checkpoint RDDs as "new" and
     // yank their truncated-lineage blocks mid-query.
     val results = names.grouped(16).toSeq.flatMap { chunk =>
-      val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-      val rs = TestSpark.parMap(chunk) { name =>
-        val a = fingerprint(spark, name)
-        val rerun = a == fingerprint(spark, name)
-        val invariant = a == fingerprint(alt, name)
-        (name, rerun, invariant)
+      Ckpt.releasingNew(spark.sparkContext) {
+        TestSpark.parMap(chunk) { name =>
+          val a = fingerprint(spark, name)
+          val rerun = a == fingerprint(spark, name)
+          val invariant = a == fingerprint(alt, name)
+          (name, rerun, invariant)
+        }
       }
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .valuesIterator.foreach(_.unpersist(blocking = false))
-      rs
     }
     val nondet = results.collect { case (n, false, _) => n }
     val parDep = results.collect { case (n, _, false) => n }

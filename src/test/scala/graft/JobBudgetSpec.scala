@@ -21,6 +21,11 @@ import java.util.concurrent.atomic.AtomicInteger
   *    checkpointed `mult`/`normalize` supersteps; 9 since it runs as
   *    one single-task step over the checkpointed gram.
   *  - q209_abtt_rerank: 46 → 26 (it shares q204's `pcaParts`).
+  *  - q247_bpe_fertility: 41, with no argmax barrier per BPE superstep
+  *    (the 1-row argmax is computed inside applyMerge's broadcast).
+  *  - q248_bpe_compression: 39, same elided argmax barrier as q247.
+  *  - q256_bpe_oov_audit: 55, applying its 8 learned merges to the
+  *    held-out vocab in ONE broadcast pass, not 8 applyMerge barriers.
   */
 class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -28,7 +33,10 @@ class JobBudgetSpec extends AnyFunSuite {
 
   private val jobBudget = Map(
     "q204_pca_power" -> 9,
-    "q209_abtt_rerank" -> 26)
+    "q209_abtt_rerank" -> 26,
+    "q247_bpe_fertility" -> 41,
+    "q248_bpe_compression" -> 39,
+    "q256_bpe_oov_audit" -> 55)
 
   /** Jobs started by constructing and collecting `name`, with the
     * listener bus drained on both sides of the window. Checkpoint
@@ -40,18 +48,14 @@ class JobBudgetSpec extends AnyFunSuite {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    val preexisting = sc.getPersistentRDDs.keySet
-    Bus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      SparkEntry.queries(name)(spark, dir).collect()
+    Ckpt.releasingNew(sc) {
       Bus.drain(sc)
-      jobs.get()
-    } finally {
-      sc.removeSparkListener(listener)
-      sc.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting(id) }
-        .valuesIterator.foreach(_.unpersist(blocking = false))
+      sc.addSparkListener(listener)
+      try {
+        SparkEntry.queries(name)(spark, dir).collect()
+        Bus.drain(sc)
+        jobs.get()
+      } finally sc.removeSparkListener(listener)
     }
   }
 

@@ -6,8 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * AT MOST its recorded number of ShuffleExchanges (fewer is fine — an
   * optimization shouldn't fail the net). A silent extra shuffle is the
   * classic scale regression: invisible at sf0.001, a new bottleneck at
-  * 100 TB. Regenerate budgets with `runMain graft.ShufBudget` after an
-  * intentional plan change.
+  * 100 TB. After an intentional plan change, read the new count off
+  * the failure message: an over-budget query reports `name: n > b`,
+  * and a query with no recorded entry is held to 0, so a new query
+  * with shuffles reports its measured count the same way.
   */
 class ShuffleBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
