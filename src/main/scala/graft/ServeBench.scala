@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Bus
 
 /** Serving-latency probe for [[graft.queries.Retrieval.hybridSearch]]
   * — the repo's one INTERACTIVE path (q171's fused ranking over the
@@ -32,14 +35,19 @@ import org.apache.spark.sql.functions._
   * from the percentiles, matching how a serving tier warms.
   *
   * Two latency points per run: the UNPREPARED path (every query
-  * re-resolves and re-reads the index relations — `p50_s`/`p95_s`)
-  * and the WARM path over one `Retrieval.prepareServing` handle
-  * (relations resolved once, doclens/totals/centroids cached —
+  * re-resolves the index relations and re-collects the totals and
+  * centroids — `p50_s`/`p95_s`) and the WARM path over one
+  * `Retrieval.prepareServing` handle (relations resolved once, totals
+  * and centroids on the driver, doclens cached on the executors —
   * `warm_p50_s`/`warm_p95_s`, with the one-time `prep_s` separate).
   * The gap is pure per-call overhead: both paths run the same plan
   * shape (RetrievalSpec pins row equality), so warm/cold is the
   * re-planning + re-listing + statistics-re-read tax a prepared
-  * serving tier avoids.
+  * serving tier avoids. Each query arrives as a one-row local
+  * relation, as a caller hands it in. `warm_jobs_p50` is the median
+  * number of Spark jobs one warm query starts, counted by a listener
+  * whose bus is drained around each query — the figure perfbench
+  * reports as `retrieval.jobs_per_lookup`.
   *
   * Pruning evidence — measured from the index, not asserted: the
   * lexical arm's scale story is that range-clustered postings let a
@@ -99,42 +107,54 @@ object ServeBench {
         slice(expr(s"array_distinct(${
           graft.queries.TextQueries.wordsExpr})"), 1, 8).as("terms"))
       .orderBy(col("vec_id")).limit(nQueries)
-      .localCheckpoint()
-    val qs = battery.select(col("vec_id"), col("terms")).collect()
-      .map(r => (r.getLong(0), r.getSeq[String](1)))
+    val qs = battery.select(col("vec_id"), col("embedding"), col("terms"))
+      .collect().map(r => (r.getLong(0), r.get(1), r.getSeq[String](2)))
+    val qSchema = battery.select(col("vec_id"), col("embedding")).schema
+    def query(vecId: Long, emb: Any) = spark.createDataFrame(
+      java.util.List.of(Row(vecId, emb)), qSchema)
 
-    def serveOnce(vecId: Long, terms: Seq[String]): Double = {
+    def serveOnce(vecId: Long, emb: Any, terms: Seq[String]): Double = {
       val t0 = System.nanoTime()
       val rows = graft.queries.Retrieval.hybridSearch(spark, text,
-        vector, terms, battery.where(col("vec_id") === vecId)
-          .select(col("vec_id"), col("embedding")), nprobe).collect()
+        vector, terms, query(vecId, emb), nprobe).collect()
       require(rows.nonEmpty, s"query $vecId returned no results")
       (System.nanoTime() - t0) / 1e9
     }
-    val cold = serveOnce(qs.head._1, qs.head._2)
-    val laps = qs.map { case (id, terms) => serveOnce(id, terms) }
+    val cold = (serveOnce _).tupled(qs.head)
+    val laps = qs.map((serveOnce _).tupled)
     val sorted = laps.sorted
     def pct(p: Double): Double = sorted((p * (sorted.length - 1)).toInt)
 
     // warm phase: the SAME battery over a prepared handle
     // (Retrieval.prepareServing — index relations resolved once,
-    // doclens/totals/centroids cached), the shape a serving tier
-    // actually runs; prep cost is reported separately because it
-    // amortizes over the handle's lifetime, not per query
+    // totals/centroids on the driver, doclens cached), the shape a
+    // serving tier actually runs; prep cost is reported separately
+    // because it amortizes over the handle's lifetime, not per query
     val tPrep0 = System.nanoTime()
     val handle = graft.queries.Retrieval.prepareServing(spark, text,
       vector)
     val prepS = (System.nanoTime() - tPrep0) / 1e9
-    def serveWarm(vecId: Long, terms: Seq[String]): Double = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    // (seconds, jobs) of one warm query, the bus drained on both sides
+    def serveWarm(vecId: Long, emb: Any, terms: Seq[String])
+        : (Double, Int) = {
+      Bus.drain(sc)
+      val j0 = jobs.get()
       val t0 = System.nanoTime()
       val rows = graft.queries.Retrieval.hybridSearchPrepared(handle,
-        terms, battery.where(col("vec_id") === vecId)
-          .select(col("vec_id"), col("embedding")), nprobe).collect()
+        terms, query(vecId, emb), nprobe).collect()
+      val sec = (System.nanoTime() - t0) / 1e9
       require(rows.nonEmpty, s"warm query $vecId returned no results")
-      (System.nanoTime() - t0) / 1e9
+      Bus.drain(sc)
+      (sec, jobs.get() - j0)
     }
-    serveWarm(qs.head._1, qs.head._2) // first warm lap absorbs codegen
-    val warmLaps = qs.map { case (id, terms) => serveWarm(id, terms) }
+    (serveWarm _).tupled(qs.head) // first warm lap absorbs codegen
+    val (warmLaps, warmJobs) = qs.map((serveWarm _).tupled).unzip
     val warmSorted = warmLaps.sorted
     def wpct(p: Double): Double =
       warmSorted((p * (warmSorted.length - 1)).toInt)
@@ -173,12 +193,12 @@ object ServeBench {
         }
       } finally r.close()
     }
-    val hitCounts = qs.map { case (_, terms) =>
+    val hitCounts = qs.map { case (_, _, terms) =>
       ranges.count { case (mn, mx) =>
         terms.exists(t => t >= mn && t <= mx) }
     }.sorted
 
-    println(f"""{"metric":"serve_hybrid_sec","sf":"$sfDir","n_queries":${qs.length},"cold_s":$cold%.3f,"p50_s":${pct(0.5)}%.3f,"p95_s":${pct(0.95)}%.3f,"mean_s":${laps.sum / laps.length}%.3f,"prep_s":$prepS%.3f,"warm_p50_s":${wpct(0.5)}%.3f,"warm_p95_s":${wpct(0.95)}%.3f,"warm_mean_s":${warmLaps.sum / warmLaps.length}%.3f,"rowgroups_total":${ranges.length},"rowgroups_hit_p50":${hitCounts(hitCounts.length / 2)},"cells":$k,"nprobe":$nprobe}""")
+    println(f"""{"metric":"serve_hybrid_sec","sf":"$sfDir","n_queries":${qs.length},"cold_s":$cold%.3f,"p50_s":${pct(0.5)}%.3f,"p95_s":${pct(0.95)}%.3f,"mean_s":${laps.sum / laps.length}%.3f,"prep_s":$prepS%.3f,"warm_p50_s":${wpct(0.5)}%.3f,"warm_p95_s":${wpct(0.95)}%.3f,"warm_mean_s":${warmLaps.sum / warmLaps.length}%.3f,"warm_jobs_p50":${warmJobs.sorted.apply(warmJobs.length / 2)},"rowgroups_total":${ranges.length},"rowgroups_hit_p50":${hitCounts(hitCounts.length / 2)},"cells":$k,"nprobe":$nprobe}""")
     spark.stop()
   }
 }

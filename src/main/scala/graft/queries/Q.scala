@@ -313,12 +313,39 @@ object Q {
     b.select(col("n")).crossJoin(broadcast(wide))
   }
 
-  /** Per-posting BM25 scoring + per-doc aggregation — ONE definition
-    * of the ranking math (k1 = 1.2 → tf·(k1+1) = tf·2.2 numerator,
-    * b = 0.75 length normalization, Robertson +1 idf) shared by q132's
-    * in-query scorer and `sinks.TextIndex.searchBm25`, so the
-    * persisted-index and in-query rankers cannot drift (their spec
-    * parity is pinned at specific term sets; this makes it structural).
+  /** The per-posting BM25 term weight — ONE definition of the ranking
+    * math (k1 = 1.2 → tf·(k1+1) = tf·2.2 numerator, b = 0.75 length
+    * normalization, Robertson +1 idf) over a row's `tf`, `df` and `dl`
+    * columns. q132's in-query scorer, `sinks.TextIndex.searchBm25` and
+    * the serving path's lexical arm all sum it, so the persisted-index
+    * and in-query rankers cannot drift (their spec parity is pinned at
+    * specific term sets; this makes it structural).
+    *
+    * @param nn     corpus document count: the crossed-in totals column,
+    *               or a driver literal
+    * @param toktot corpus token count, likewise
+    */
+  def bm25Part(nn: Column, toktot: Column): Column =
+    log(lit(1.0d) + (nn.cast("double") - col("df") +
+      lit(0.5d)) / (col("df").cast("double") + lit(0.5d))) *
+      (col("tf").cast("double") * lit(2.2d)) /
+      (col("tf").cast("double") + lit(1.2d) *
+        (lit(0.25d) + lit(0.75d) *
+          col("dl").cast("double") / (toktot.cast("double") / nn)))
+
+  /** [[bm25Part]] summed per `keys` over (tf, df, dl[, nn, toktot])
+    * rows: (keys…, score_raw, n_terms).
+    */
+  def bm25Sum(scored: DataFrame, nn: Column, toktot: Column,
+      keys: Seq[String]): DataFrame =
+    scored.withColumn("part", bm25Part(nn, toktot))
+      .groupBy(keys.map(col): _*)
+      .agg(sum(col("part")).as("score_raw"),
+        count(lit(1)).as("n_terms"))
+
+  /** Per-posting BM25 scoring + per-doc aggregation with the corpus
+    * totals as a one-row relation — q132's in-query scorer and
+    * `sinks.TextIndex.searchBm25`.
     *
     * @param tf     (doc_id, word, tf) postings, pre-filtered to terms
     * @param df     (word, df) document frequencies (broadcast)
@@ -338,20 +365,10 @@ object Q {
     */
   def bm25AggregateBy(tf: DataFrame, df: DataFrame, dl: DataFrame,
       totals: DataFrame, keys: Seq[String]): DataFrame =
-    tf.join(broadcast(df), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(totals))
-      .withColumn("avgdl", col("toktot").cast("double") / col("nn"))
-      .withColumn("part",
-        log(lit(1.0d) + (col("nn").cast("double") - col("df") +
-          lit(0.5d)) / (col("df").cast("double") + lit(0.5d))) *
-          (col("tf").cast("double") * lit(2.2d)) /
-          (col("tf").cast("double") + lit(1.2d) *
-            (lit(0.25d) + lit(0.75d) *
-              col("dl").cast("double") / col("avgdl"))))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("part")).as("score_raw"),
-        count(lit(1)).as("n_terms"))
+    bm25Sum(tf.join(broadcast(df), "word")
+        .join(dl, "doc_id")
+        .crossJoin(broadcast(totals)),
+      col("nn"), col("toktot"), keys)
 
   /** BM25 result contract shared by q132 and TextIndex.searchBm25:
     * rank at round-9 (IEEE noise guard), top-k via sort+limit

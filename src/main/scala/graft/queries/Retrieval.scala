@@ -1,9 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
+import scala.jdk.CollectionConverters._
 import graft.Ckpt._
+import graft.functions.DotProduct
 import graft.sinks.{TextIndex, VectorIndex}
 
 /** Index-backed form of the q269 hybrid-retrieval eval — the 100 TB
@@ -39,6 +43,213 @@ object Retrieval {
 
   private val fetchMargin = 8
 
+  /** q171's fused hybrid retrieval as the SERVING path over the two
+    * persisted indexes — one query in, the RRF-fused top-N out: the
+    * lexical arm is [[TextIndex.searchBm25]]'s q132-pinned scorer over
+    * a word-pruned postings scan, the semantic arm is
+    * [[VectorIndex.search]]'s probe rule over a cell-pruned postings
+    * scan, re-ranked at round-9 (the Valuation boundary-tie margin),
+    * both capped at `arms` and fused with the SHARED
+    * [[SimilarityQueries.rrfScore]] and q171's `(rrf DESC, doc_id ASC)`
+    * order, so the in-query and index-backed rankings cannot drift.
+    * RetrievalSpec pins full probe ≡ q171 row for row.
+    *
+    * @param terms  lexical term bag
+    * @param query  ONE-row (vec_id, embedding) query vector; its own
+    *               corpus entry (if indexed) is excluded, matching
+    *               q171's vec_id-0 convention
+    * @param nprobe IVF cells probed (semantic recall knob)
+    * @param arms   per-arm candidate-list depth before fusion (50)
+    * @param topN   fused results returned (20)
+    * @return (rk, doc_id, lex_rk, sem_rk, rrf) — q171's contract
+    */
+  def hybridSearch(spark: SparkSession, textIndexDir: String,
+      vecIndexDir: String, terms: Seq[String], query: DataFrame,
+      nprobe: Int, arms: Int = 50, topN: Int = 20,
+      kRrf: Int = 60): DataFrame =
+    hybridSearchPrepared(
+      prepareServing(spark, textIndexDir, vecIndexDir, cache = false),
+      terms, query, nprobe, arms, topN, kRrf)
+
+  /** A prepared serving context for [[hybridSearchPrepared]]: every
+    * index relation [[hybridSearch]] would otherwise re-resolve per
+    * call, resolved ONCE (one directory listing and schema merge each),
+    * with the BOUNDED statistics held where a lookup reads them:
+    *
+    *  - on the DRIVER, collected at prepare time: the k centroid rows
+    *    (`centroids`, a local relation the probe ranking projects
+    *    over without a job) and the ONE merged (nn, toktot) totals row
+    *    (`nn`, `toktot`, folded into the BM25 plan as literals);
+    *  - on the EXECUTORS, when `cache` is on: `doclens` — (doc_id, dl),
+    *    16 bytes/doc, the BM25 length norms a lexical serving tier
+    *    holds resident (what Lucene keeps in its norms file) — ~160 MB
+    *    per executor per billion docs on a 1000-executor cluster,
+    *    MEMORY_AND_DISK so an undersized executor degrades to spill,
+    *    not OOM.
+    *
+    * The two posting trees are NOT cached — their scale contract is
+    * the word-range / IVF-cell pruned scan, and caching a corpus-sized
+    * tree would defeat it — but their resolved file indexes are
+    * reused, so the per-query driver cost drops to planning alone.
+    *
+    * SNAPSHOT semantics: the handle pins the generation set visible at
+    * prepare time, and the totals and centroids it collected then.
+    * Rows appended (or cells split/compacted) after [[prepareServing]]
+    * are invisible to it — re-prepare to pick up a new generation, the
+    * swap a serving tier does at index publish. Call
+    * [[ServingHandle.close]] to release the cached doclens.
+    */
+  final class ServingHandle private[queries] (
+      private[queries] val textPostings: DataFrame,
+      private[queries] val doclens: DataFrame,
+      private[queries] val nn: Long,
+      private[queries] val toktot: Long,
+      private[queries] val centroids: DataFrame,
+      private[queries] val vecPostings: DataFrame,
+      cached: Boolean) {
+    def close(): Unit = if (cached) doclens.unpersist()
+  }
+
+  /** Build a [[ServingHandle]] over the two persisted indexes. Collects
+    * the totals row and the k centroid rows (a few small jobs) and,
+    * with `cache` on, persists and materializes doclens. `cache = false`
+    * skips only that step: it is the handle [[hybridSearch]] builds per
+    * call (the cold path delegates through it, so prepared and
+    * unprepared CANNOT drift).
+    */
+  def prepareServing(spark: SparkSession, textIndexDir: String,
+      vecIndexDir: String, cache: Boolean = true): ServingHandle = {
+    val doclens = TextIndex.readDoclens(spark, textIndexDir)
+    if (cache) // materialize: the first query serves warm
+      doclens.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
+    val totals = TextIndex.readTotals(spark, textIndexDir).head()
+    val cents = spark.read.parquet(s"$vecIndexDir/centroids")
+      .select(col("cent_id"), col("cv"))
+    new ServingHandle(TextIndex.readPostings(spark, textIndexDir),
+      doclens,
+      if (totals.isNullAt(0)) 0L else totals.getLong(0),
+      if (totals.isNullAt(1)) 0L else totals.getLong(1),
+      local(spark, cents.collect().toSeq, cents.schema),
+      VectorIndex.readPostings(spark, vecIndexDir), cache)
+  }
+
+  /** [[hybridSearch]] over a prepared handle. Only the two corpus-sized
+    * scans run as Spark jobs: the lexical arm (`TextIndex.searchBm25On`,
+    * the BM25 top-k with the totals as literals) and the semantic
+    * candidate scan ([[semanticCandidates]]); each returns at most
+    * `arms` + a tie margin rows, collected to the driver. The
+    * bounded rest runs on the driver without a job — the query vector
+    * (a projection over a local relation folds), the probe ranking
+    * over the k prepared centroids, the round-9 semantic re-rank and
+    * the RRF fusion — and the ≤ topN fused rows come back as a local
+    * relation, so the caller's `collect()` starts no job either (the
+    * REPOSE shape: pruned scans whose small top-k lists merge at the
+    * coordinator). [[hybridSearch]] IS this method over an uncached
+    * handle; RetrievalSpec pins warm ≡ cold row for row, bounded
+    * probes ≡ the distributed composition this replaced, and the
+    * snapshot contract; JobBudgetSpec pins the job count.
+    */
+  def hybridSearchPrepared(handle: ServingHandle, terms: Seq[String],
+      query: DataFrame, nprobe: Int, arms: Int = 50, topN: Int = 20,
+      kRrf: Int = 60): DataFrame = {
+    val qs = query.select(col("vec_id"), expr("l2_normalize(embedding)"))
+      .collect()
+    require(qs.length == 1,
+      s"hybridSearch takes ONE query row, got ${qs.length}")
+    val (qid, qv) = (qs(0).get(0), qs(0).getSeq[Double](1))
+    val cells = probeCells(handle.centroids, qv, nprobe)
+    val sem = rankDesc(semanticCandidates(handle.vecPostings, qid, qv,
+        cells, arms + fetchMargin).collect().toSeq, "cos_r", "doc_id")
+      .take(arms).map(_.getLong(0)).zipWithIndex
+      .map { case (id, i) => id -> (i + 1) }.toMap
+    // an empty text index has nothing to score, and its zero totals
+    // would make the folded avgdl literal divide by zero
+    val lex =
+      if (handle.nn == 0) Map.empty[Long, Int]
+      else TextIndex.searchBm25On(handle.textPostings, handle.doclens,
+          handle.nn, handle.toktot, terms, arms)
+        .collect().map(r => r.getLong(1) -> r.getInt(0)).toMap
+    fuse(query.sparkSession, lex, sem, kRrf, topN)
+  }
+
+  /** The semantic candidate scan: the probed cells' postings (partition
+    * pruned on `cell`, the query's own id excluded), exact cosine
+    * against the query-vector literal, the top `fetch` by (raw cosine
+    * DESC, doc_id ASC) — [[VectorIndex.search]]'s candidate rule — as
+    * one TakeOrdered, each with the round-9 cosine the driver re-ranks
+    * by: (doc_id, cos_r).
+    */
+  private[graft] def semanticCandidates(postings: DataFrame, qid: Any,
+      qv: Seq[Double], cells: Seq[Long], fetch: Int): DataFrame =
+    postings.where(col("cell").isin(cells: _*) && col("vec_id") =!= lit(qid))
+      .select(col("vec_id").as("doc_id"),
+        DotProduct.dot(typedLit(qv), col("v")).as("cos"))
+      .orderBy(col("cos").desc, col("doc_id").asc)
+      .limit(fetch)
+      .select(col("doc_id"), round(col("cos"), 9).as("cos_r"))
+
+  /** The `nprobe` cells [[VectorIndex.search]] would probe for `qv`:
+    * centroids by (dot_product(qv, cv) DESC, cent_id ASC). The k
+    * similarities come from the `dot_product` expression itself,
+    * projected over the local centroid relation (folded on the
+    * driver, no job).
+    */
+  private[queries] def probeCells(centroids: DataFrame, qv: Seq[Double],
+      nprobe: Int): Seq[Long] =
+    rankDesc(centroids.select(col("cent_id"),
+          DotProduct.dot(typedLit(qv), col("cv")).as("sim"))
+        .collect().toSeq, "sim", "cent_id")
+      .take(nprobe).map(_.getLong(0))
+
+  /** RRF-fuse two ranked arms (doc_id → rank) into q171's contract
+    * (rk, doc_id, lex_rk, sem_rk, rrf), top `topN` by (rrf DESC, doc_id
+    * ASC). The score is [[SimilarityQueries.rrfScore]] projected over a
+    * local relation (folded, no job); the result is a local relation.
+    */
+  private def fuse(spark: SparkSession, lex: Map[Long, Int],
+      sem: Map[Long, Int], kRrf: Int, topN: Int): DataFrame = {
+    def rk(arm: Map[Long, Int], id: Long) = arm.get(id).map(Int.box).orNull
+    val merged = (lex.keySet ++ sem.keySet).toSeq
+      .map(id => Row(id, rk(lex, id), rk(sem, id)))
+    val scored = local(spark, merged, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("lex_rk", IntegerType),
+        StructField("sem_rk", IntegerType))))
+      .select(col("doc_id"), col("lex_rk"), col("sem_rk"),
+        SimilarityQueries.rrfScore(kRrf).as("rrf"))
+    local(spark,
+      rankDesc(scored.collect().toSeq, "rrf", "doc_id").take(topN)
+        .zipWithIndex.map { case (r, i) =>
+          Row(i + 1, r.get(0), r.get(1), r.get(2), r.get(3))
+        },
+      StructType(StructField("rk", IntegerType, nullable = false) +:
+        scored.schema.fields.toSeq))
+  }
+
+  /** `rows` in Spark SQL's `(score DESC, id ASC)` order — NULL scores
+    * last, NaN above every number, 0.0 = -0.0 — the order of the window
+    * ranks the serving path's driver-side picks replace.
+    */
+  private def rankDesc(rows: Seq[Row], score: String,
+      id: String): Seq[Row] =
+    rows.sortWith { (a, b) =>
+      val (s, i) = (a.fieldIndex(score), a.fieldIndex(id))
+      val bySc =
+        if (a.isNullAt(s) || b.isNullAt(s))
+          java.lang.Boolean.compare(a.isNullAt(s), b.isNullAt(s))
+        else {
+          val (x, y) = (a.getDouble(s), b.getDouble(s))
+          if (x == y) 0 else java.lang.Double.compare(y, x)
+        }
+      (if (bySc != 0) bySc
+       else java.lang.Long.compare(a.getLong(i), b.getLong(i))) < 0
+    }
+
+  private def local(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
   /** q269's three-system MRR@10 eval with per-query candidates from
     * the two persisted indexes.
     *
@@ -72,126 +283,6 @@ object Retrieval {
     * against id-pruned metadata/vector fetches; the fusion and eval
     * tail see ≤ topN rows per (query, system).
     */
-  /** q171's fused hybrid retrieval as the SERVING path over the two
-    * persisted indexes — one query in, the RRF-fused top-N out: the
-    * lexical arm from [[TextIndex.searchBm25]] (word-pruned postings
-    * scan, the q132-pinned scorer), the semantic arm from
-    * [[VectorIndex.search]] re-scored at round-9 on the index's stored
-    * vectors (the Valuation boundary-tie margin), both capped at
-    * `arms`, fused by the SHARED [[SimilarityQueries.rrfFuseTop]] —
-    * the q171 QDef executes the same tail, so the in-query and
-    * index-backed rankings cannot drift. RetrievalSpec pins full probe
-    * ≡ q171 row for row.
-    *
-    * @param terms  lexical term bag
-    * @param query  ONE-row (vec_id, embedding) query vector; its own
-    *               corpus entry (if indexed) is excluded, matching
-    *               q171's vec_id-0 convention
-    * @param nprobe IVF cells probed (semantic recall knob)
-    * @param arms   per-arm candidate-list depth before fusion (50)
-    * @param topN   fused results returned (20)
-    * @return (rk, doc_id, lex_rk, sem_rk, rrf) — q171's contract
-    */
-  def hybridSearch(spark: SparkSession, textIndexDir: String,
-      vecIndexDir: String, terms: Seq[String], query: DataFrame,
-      nprobe: Int, arms: Int = 50, topN: Int = 20,
-      kRrf: Int = 60): DataFrame =
-    hybridSearchPrepared(
-      prepareServing(spark, textIndexDir, vecIndexDir, cache = false),
-      terms, query, nprobe, arms, topN, kRrf)
-
-  /** A prepared serving context for [[hybridSearchPrepared]]: every
-    * index relation [[hybridSearch]] re-resolves per call — the
-    * postings/doclens/stats trees of the TextIndex, the centroids and
-    * postings of the VectorIndex — resolved ONCE (one directory
-    * listing and schema merge each) and, when `cache` is on, the
-    * BOUNDED statistics pinned in executor memory:
-    *
-    *  - `centroids` — k rows (one per IVF cell),
-    *  - `totals` — the ONE merged (nn, toktot) row,
-    *  - `doclens` — (doc_id, dl), 16 bytes/doc: the BM25 length norms
-    *    a lexical serving tier holds resident (what Lucene keeps in
-    *    its norms file) — ~160 MB per executor per billion docs on a
-    *    1000-executor cluster, MEMORY_AND_DISK so an undersized
-    *    executor degrades to spill, not OOM.
-    *
-    * The two posting trees are NOT cached — their scale contract is
-    * the word-range / IVF-cell pruned scan, and caching a corpus-sized
-    * tree would defeat it — but their resolved file indexes are
-    * reused, so the per-query driver cost drops to planning alone.
-    *
-    * SNAPSHOT semantics: the handle pins the generation set visible at
-    * prepare time. Rows appended (or cells split/compacted) after
-    * [[prepareServing]] are invisible to it — re-prepare to pick up a
-    * new generation, the swap a serving tier does at index publish.
-    * Call [[ServingHandle.close]] to release the pinned relations.
-    */
-  final class ServingHandle private[queries] (
-      private[queries] val textPostings: DataFrame,
-      private[queries] val doclens: DataFrame,
-      private[queries] val totals: DataFrame,
-      private[queries] val centroids: DataFrame,
-      private[queries] val vecPostings: DataFrame,
-      private val cached: Seq[DataFrame]) {
-    def close(): Unit = cached.foreach(_.unpersist())
-  }
-
-  /** Build a [[ServingHandle]] over the two persisted indexes.
-    * `cache = false` skips the persist/materialize step and is the
-    * exact relation set [[hybridSearch]] uses per call (the cold path
-    * delegates through it, so prepared and unprepared CANNOT drift).
-    */
-  def prepareServing(spark: SparkSession, textIndexDir: String,
-      vecIndexDir: String, cache: Boolean = true): ServingHandle = {
-    val doclens = TextIndex.readDoclens(spark, textIndexDir)
-    val totals = TextIndex.readTotals(spark, textIndexDir)
-    val cents = spark.read.parquet(s"$vecIndexDir/centroids")
-    val cached =
-      if (!cache) Seq.empty[DataFrame]
-      else {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        Seq(doclens, totals, cents).map { df =>
-          df.persist(lvl).count() // materialize: first query serves warm
-          df
-        }
-      }
-    new ServingHandle(
-      TextIndex.readPostings(spark, textIndexDir), doclens, totals,
-      cents, VectorIndex.readPostings(spark, vecIndexDir), cached)
-  }
-
-  /** [[hybridSearch]] over a prepared handle — q171's fused ranking
-    * with per-query work cut to the two pruned scans + the fusion
-    * tail. Identical results by construction ([[hybridSearch]] IS this
-    * method over an uncached handle); RetrievalSpec additionally pins
-    * warm ≡ cold row for row and the snapshot contract (post-prepare
-    * appends invisible until re-prepare).
-    */
-  def hybridSearchPrepared(handle: ServingHandle, terms: Seq[String],
-      query: DataFrame, nprobe: Int, arms: Int = 50, topN: Int = 20,
-      kRrf: Int = 60): DataFrame = {
-    val lex = TextIndex.searchBm25On(handle.textPostings,
-        handle.doclens, handle.totals, terms, arms)
-      .select(col("doc_id"), col("rk").as("lex_rk"))
-    val qv = query.select(expr("l2_normalize(embedding)").as("qv"))
-      .ckpt() // one row; cuts the query lineage before the join below
-    val hits = VectorIndex.searchOn(handle.centroids,
-        handle.vecPostings, query, nprobe,
-        topK = arms + fetchMargin) // self already excluded by search
-      .select(col("neighbor_id").as("vec_id"))
-    val sem = handle.vecPostings.select(col("vec_id"), col("v"))
-      .join(broadcast(hits), "vec_id")
-      .crossJoin(broadcast(qv))
-      .select(col("vec_id").as("doc_id"),
-        round(expr("dot_product(v, qv)"), 9).as("cos_r"))
-      .orderBy(col("cos_r").desc, col("doc_id").asc)
-      .limit(arms)
-      .withColumn("sem_rk", row_number().over(Q.bounded.orderBy(
-        col("cos_r").desc, col("doc_id").asc)))
-      .select(col("doc_id"), col("sem_rk"))
-    SimilarityQueries.rrfFuseTop(sem, lex, kRrf, topN)
-  }
-
   def hybridMrrFromIndexes(spark: SparkSession, textIndexDir: String,
       vecIndexDir: String, queries: DataFrame, corpus: DataFrame,
       nprobe: Int, lexFetchK: Int, topN: Int = 50, semFetchK: Int = 0,
@@ -264,31 +355,6 @@ object Retrieval {
       qmeta.select(col("qid")), kRrf)
   }
 
-  /** q172's NDCG@10 retrieval eval with candidates from a PERSISTED
-    * [[VectorIndex]] — the third and last retrieval-eval surface on
-    * the index-backed path (MRR: [[hybridMrrFromIndexes]]; serving:
-    * [[hybridSearch]]). The quantizer, cell assignments, and probe
-    * rule all come from the index (centroids + cell-partitioned
-    * postings); the metric math is the SHARED
-    * [[SimilarityQueries.ndcgAt10Tail]] the q172 QDef executes, so the
-    * two evals cannot drift. With the index built at q172's k=16 /
-    * trainIters=0 quantizer and nprobe=2, RetrievalSpec pins this
-    * ≡ q172 row for row.
-    *
-    * Unlike [[VectorIndex.search]] the candidate set is NOT
-    * top-k-capped: ideal DCG needs the full relevant count among the
-    * probed cells' candidates, so the probe joins whole cells — the
-    * blast radius is still nprobe/k of the corpus per query, the IVF
-    * scale contract.
-    *
-    * @param queries (vec_id, label, embedding) — the eval battery
-    * @param labels  (vec_id, label) — neighbor ground truth, co-keyed
-    *                with the postings on vec_id (one equi-join; at
-    *                scale both sides are corpus-sized and hash-join on
-    *                the id)
-    * @param nprobe  IVF cells probed per query (q172 uses 2)
-    * @return (qlabel, n_eval, mean_ndcg) — q172's contract
-    */
   /** q280's semantic eval-set decontamination screen over a PERSISTED
     * [[VectorIndex]] — the 100 TB candidate path: the quantizer, the
     * train-side cell assignments (rn=1 — the index's stored cells) and
@@ -351,6 +417,31 @@ object Retrieval {
     SimilarityQueries.decontamTail(nn)
   }
 
+  /** q172's NDCG@10 retrieval eval with candidates from a PERSISTED
+    * [[VectorIndex]] — the third and last retrieval-eval surface on
+    * the index-backed path (MRR: [[hybridMrrFromIndexes]]; serving:
+    * [[hybridSearch]]). The quantizer, cell assignments, and probe
+    * rule all come from the index (centroids + cell-partitioned
+    * postings); the metric math is the SHARED
+    * [[SimilarityQueries.ndcgAt10Tail]] the q172 QDef executes, so the
+    * two evals cannot drift. With the index built at q172's k=16 /
+    * trainIters=0 quantizer and nprobe=2, RetrievalSpec pins this
+    * ≡ q172 row for row.
+    *
+    * Unlike [[VectorIndex.search]] the candidate set is NOT
+    * top-k-capped: ideal DCG needs the full relevant count among the
+    * probed cells' candidates, so the probe joins whole cells — the
+    * blast radius is still nprobe/k of the corpus per query, the IVF
+    * scale contract.
+    *
+    * @param queries (vec_id, label, embedding) — the eval battery
+    * @param labels  (vec_id, label) — neighbor ground truth, co-keyed
+    *                with the postings on vec_id (one equi-join; at
+    *                scale both sides are corpus-sized and hash-join on
+    *                the id)
+    * @param nprobe  IVF cells probed per query (q172 uses 2)
+    * @return (qlabel, n_eval, mean_ndcg) — q172's contract
+    */
   def ndcgFromIndexes(spark: SparkSession, vecIndexDir: String,
       queries: DataFrame, labels: DataFrame, nprobe: Int): DataFrame = {
     val cents = spark.read.parquet(s"$vecIndexDir/centroids")

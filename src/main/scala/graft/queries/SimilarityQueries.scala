@@ -127,8 +127,20 @@ object SimilarityQueries {
              / (size(sg) + size(qsg)
                 - size(array_intersect(sg, qsg))) end, 9)""")
 
-  /** q171's RRF fusion + fused-top-N tail, shared with
-    * [[Retrieval.hybridSearch]] (the serving-path twin): takes the two
+  /** q171's round-9 RRF score over nullable `lex_rk`/`sem_rk` rank
+    * columns: 1/(kRrf+rank) per side, a missing side contributing 0.
+    * [[rrfFuseTop]] and the serving path's driver-side fusion
+    * ([[Retrieval.hybridSearchPrepared]]) both score with it.
+    */
+  private[queries] def rrfScore(kRrf: Int): org.apache.spark.sql.Column =
+    round(
+      coalesce(lit(1.0d) / (lit(kRrf) + col("lex_rk")), lit(0.0d)) +
+      coalesce(lit(1.0d) / (lit(kRrf) + col("sem_rk")), lit(0.0d)),
+      9)
+
+  /** q171's RRF fusion + fused-top-N tail (the in-query form; the
+    * serving path fuses its two arms on the driver with the same
+    * [[rrfScore]] and `(rrf DESC, doc_id ASC)` order): takes the two
     * CAPPED candidate lists (doc_id, sem_rk) / (doc_id, lex_rk), fuses
     * by 1/(kRrf+rank) with a missing side contributing 0, and returns
     * q171's contract (rk, doc_id, lex_rk, sem_rk, rrf) for the top
@@ -139,10 +151,7 @@ object SimilarityQueries {
       kRrf: Int = 60, topN: Int = 20): DataFrame =
     sem.join(lex, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("lex_rk"), col("sem_rk"),
-        round(
-          coalesce(lit(1.0d) / (lit(kRrf) + col("lex_rk")), lit(0.0d)) +
-          coalesce(lit(1.0d) / (lit(kRrf) + col("sem_rk")), lit(0.0d)),
-          9).as("rrf"))
+        rrfScore(kRrf).as("rrf"))
       .withColumn("rk", row_number().over(Q.bounded.orderBy(
         col("rrf").desc, col("doc_id").asc)))
       .where(col("rk") <= topN)

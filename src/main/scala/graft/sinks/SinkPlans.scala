@@ -119,29 +119,22 @@ object SinkPlans {
         LmIndex.probeNext(spark, lm, Seq("the", "data"), 5)),
       // the one interactive serving path (q171's fused ranking over
       // BOTH persisted indexes — graft.ServeBench measures its
-      // per-query latency at scale); gated here so the lexical arm's
-      // word-IN pushdown and the semantic arm's cell pruning stay
-      // reviewed plans, not just benched ones
-      "Retrieval.hybridSearch" -> (() =>
-        graft.queries.Retrieval.hybridSearch(spark, text, vector,
-          Seq("the", "data"), queries().where(col("vec_id") === 0),
-          nprobe = 2)),
-      // the warm form of the same path: per-query plan over a prepared
-      // handle (cached doclens/totals/centroids, reused file indexes —
-      // graft.ServeBench's warm phase); gated separately because the
-      // InMemoryRelation inputs change the physical plan the cold
-      // entry reviews
-      "Retrieval.hybridSearch.prepared" -> (() => {
-        // handle left open: the gates inspect the returned frame's
-        // executed plan, which must still see the cached relations
-        // (closing first would gate the cold plan twice); the pinned
-        // rows are the fixture's k+|docs|+1 statistics rows
-        val h = graft.queries.Retrieval.prepareServing(spark, text,
-          vector)
-        graft.queries.Retrieval.hybridSearchPrepared(h,
-          Seq("the", "data"), queries().where(col("vec_id") === 0),
-          nprobe = 2)
-      }),
+      // per-query latency at scale): its two corpus-sized scans, the
+      // only Spark jobs a lookup runs (Retrieval.hybridSearchPrepared
+      // fuses their ≤arms rows on the driver), gated so the lexical
+      // arm's word-IN pushdown and the semantic scan's cell pruning
+      // stay reviewed plans. The driver values a prepared handle
+      // would supply — totals, the normalized query vector, the probed
+      // cells — are fixed stand-ins here (their values do not shape
+      // the plan), so building these frames executes nothing.
+      "Retrieval.hybridSearch.lexical" -> (() =>
+        TextIndex.searchBm25On(TextIndex.readPostings(spark, text),
+          TextIndex.readDoclens(spark, text), nn = 1000L,
+          toktot = 100000L, Seq("the", "data"), topK = 50)),
+      "Retrieval.hybridSearch.semantic" -> (() =>
+        graft.queries.Retrieval.semanticCandidates(
+          VectorIndex.readPostings(spark, vector), qid = 0L,
+          qv = Seq.fill(64)(0.125), cells = Seq(0L, 1L), fetch = 58)),
       // the three index-backed EVAL paths (MRR, NDCG, decontamination
       // screen) — their in-query twins q269/q172/q280 are plan-gated
       // via SparkEntry, but the index-backed candidate plans (postings

@@ -44,7 +44,7 @@ import graft.Ckpt._
   * path, file-pruned instead of B-tree-walked. Scoring then touches
   * only matching postings; doc lengths join co-keyed on doc_id and the
   * one-row summed stats broadcast. The BM25 math and result contract
-  * are `Q.bm25Aggregate`/`Q.bm25TopK` — the SAME definitions q132
+  * are `Q.bm25Part`/`Q.bm25TopK` — the SAME definitions q132
   * executes, so the persisted and in-query rankers cannot drift;
   * TextIndexSpec additionally pins search over the persisted index
   * byte-for-byte to the in-query q132 plan.
@@ -147,29 +147,40 @@ object TextIndex {
     * q132's scorer and output contract: (rk, doc_id, n_terms, score).
     */
   def searchBm25(spark: SparkSession, indexDir: String,
-      terms: Seq[String], topK: Int): DataFrame =
-    searchBm25On(readPostings(spark, indexDir),
-      readDoclens(spark, indexDir), readTotals(spark, indexDir),
-      terms, topK)
+      terms: Seq[String], topK: Int): DataFrame = {
+    val (tf, df) = termStats(readPostings(spark, indexDir), terms)
+    graft.queries.Q.bm25TopK(graft.queries.Q.bm25Aggregate(tf, df,
+      readDoclens(spark, indexDir), readTotals(spark, indexDir)), topK)
+  }
 
-  /** [[searchBm25]] over pre-resolved index relations — the warm
-    * serving form: a prepared handle (`Retrieval.prepareServing`)
-    * resolves the postings/doclens/stats trees ONCE (one file listing,
-    * one schema merge) and caches the bounded statistics, so per-query
-    * cost is the word-pruned postings scan plus the scoring tail, not
-    * directory listings and re-reads of the same one-row totals. SAME
-    * body as [[searchBm25]] — the public form delegates here, so the
-    * two cannot drift.
+  /** [[searchBm25]] over pre-resolved index relations with the corpus
+    * totals as driver values — the serving form: a prepared handle
+    * (`Retrieval.prepareServing`) resolves the postings/doclens trees
+    * ONCE and collects the one (nn, toktot) row at prepare time, so
+    * per-query cost is the word-pruned postings scan plus the scoring
+    * tail, with the totals folded into the plan as literals instead of
+    * a crossJoin. Same term scan, BM25 weight (`Q.bm25Part`) and top-k
+    * contract as [[searchBm25]].
     */
   private[graft] def searchBm25On(postings: DataFrame,
-      doclens: DataFrame, totals: DataFrame, terms: Seq[String],
+      doclens: DataFrame, nn: Long, toktot: Long, terms: Seq[String],
       topK: Int): DataFrame = {
+    val (tf, df) = termStats(postings, terms)
+    graft.queries.Q.bm25TopK(graft.queries.Q.bm25Sum(
+      tf.join(broadcast(df), "word").join(doclens, "doc_id"),
+      lit(nn), lit(toktot), Seq("doc_id")), topK)
+  }
+
+  /** The term bag's postings, (word, doc_id, tf) behind the pushed
+    * `word IN (...)` filter, and their per-word document frequencies
+    * (word, df).
+    */
+  private def termStats(postings: DataFrame, terms: Seq[String])
+      : (DataFrame, DataFrame) = {
     val tf = postings
       .where(col("word").isin(terms: _*))
       .select(col("word"), col("doc_id"), col("tf"))
-    val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val scored = graft.queries.Q.bm25Aggregate(tf, df, doclens, totals)
-    graft.queries.Q.bm25TopK(scored, topK)
+    (tf, tf.groupBy(col("word")).agg(count(lit(1)).as("df")))
   }
 
   /** Batched BM25 over the persisted index: ONE postings scan serves a

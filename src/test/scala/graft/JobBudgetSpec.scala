@@ -1,10 +1,12 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftglue.Bus
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Job-count regression net: the exact number of Spark jobs a query
   * starts at sf0.001 — the eager checkpoint jobs of its construction
@@ -26,6 +28,15 @@ import java.util.concurrent.atomic.AtomicInteger
   *  - q248_bpe_compression: 39, same elided argmax barrier as q247.
   *  - q256_bpe_oov_audit: 55, applying its 8 learned merges to the
   *    held-out vocab in ONE broadcast pass, not 8 applyMerge barriers.
+  *
+  * One prepared hybrid lookup (`Retrieval.hybridSearchPrepared` over a
+  * handle on the sf0.001 documents and embeddings, k = 16, nprobe = 4,
+  * the query a one-row local relation) starts `lookupJobs`: the jobs
+  * of the distributed BM25 arm (df aggregate, doclens join, per-doc
+  * aggregate, top-k) plus the one TakeOrdered semantic candidate scan.
+  * It started 12 while the query vector was checkpointed, the probe
+  * cells were ranked by a Spark window, the totals were crossed in as
+  * a relation and the fusion ran as a plan.
   */
 class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -38,10 +49,12 @@ class JobBudgetSpec extends AnyFunSuite {
     "q248_bpe_compression" -> 39,
     "q256_bpe_oov_audit" -> 55)
 
-  /** Jobs started by constructing and collecting `name`, with the
-    * listener bus drained on both sides of the window. Checkpoint
-    * blocks the query created are released afterwards. */
-  private def jobsOf(name: String): Int = {
+  private val lookupJobs = 6
+
+  /** Jobs started by `body`, with the listener bus drained on both
+    * sides of the window. Checkpoint blocks it created are released
+    * afterwards. */
+  private def jobsDuring(body: => Any): Int = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger(0)
     val listener = new SparkListener {
@@ -52,12 +65,16 @@ class JobBudgetSpec extends AnyFunSuite {
       Bus.drain(sc)
       sc.addSparkListener(listener)
       try {
-        SparkEntry.queries(name)(spark, dir).collect()
+        body
         Bus.drain(sc)
         jobs.get()
       } finally sc.removeSparkListener(listener)
     }
   }
+
+  /** Jobs started by constructing and collecting query `name`. */
+  private def jobsOf(name: String): Int =
+    jobsDuring(SparkEntry.queries(name)(spark, dir).collect())
 
   test("iterative queries start exactly their recorded number of jobs") {
     val counts = jobBudget.keys.toSeq.sorted.map(n => n -> jobsOf(n))
@@ -66,5 +83,23 @@ class JobBudgetSpec extends AnyFunSuite {
         s"$n: $c jobs (recorded ${jobBudget(n)})"
     }
     assert(off.isEmpty, off.mkString("\n"))
+  }
+
+  test("a prepared hybrid lookup starts exactly its recorded jobs") {
+    val t = Tables(spark, dir)
+    val tIdx = TestSpark.tmpDir("jobs-text")
+    sinks.TextIndex.build(t.documents.select(col("doc_id"), col("text")),
+      tIdx)
+    val e = t.embeddings.select(col("vec_id"), col("embedding"))
+    val vIdx = TestSpark.tmpDir("jobs-ivf")
+    sinks.VectorIndex.build(e, vIdx, k = 16)
+    val q = spark.createDataFrame(
+      e.where(col("vec_id") === 0L).collect().toSeq.asJava, e.schema)
+    val handle = queries.Retrieval.prepareServing(spark, tIdx, vIdx)
+    try {
+      val n = jobsDuring(queries.Retrieval.hybridSearchPrepared(handle,
+        Seq("spark", "window", "merge"), q, nprobe = 4).collect())
+      assert(n == lookupJobs, s"lookup: $n jobs (recorded $lookupJobs)")
+    } finally handle.close()
   }
 }

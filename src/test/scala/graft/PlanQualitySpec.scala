@@ -427,11 +427,6 @@ class PlanQualitySpec extends AnyFunSuite {
     // size / distinct-bigram count) into the scored stream (q37
     // pattern)
     "LmIndex.score", "LmIndex.scoreKn", "LmIndex.probeNext",
-    // hybridSearch crosses the ONE-row normalized query vector into
-    // the sem-arm re-score (q171's allowance) atop searchBm25's
-    // one-row-totals cross; the prepared form is the same plan over
-    // cached statistics relations
-    "Retrieval.hybridSearch", "Retrieval.hybridSearch.prepared",
     // the index-backed eval paths cross the broadcast k-row centroid
     // table (probe selection) and/or a one-row stats aggregate
     // (decontam's mu/sigma crossJoin — the q37 pattern)
@@ -444,23 +439,19 @@ class PlanQualitySpec extends AnyFunSuite {
     "ClusterIndex.report")
 
   // searchBm25's one global window is q132's ≤topK survivor rank;
-  // hybridSearch adds its own three ranking windows, every input
-  // limit-bounded BEFORE the window: the lexical rank (searchBm25's
-  // ≤arms survivors), the semantic re-rank (≤arms+8 fetched
-  // candidates), and the RRF fusion rank (≤2·arms fused rows) —
-  // q171's reviewed shapes on the persisted-index path.
+  // hybridSearch's lexical arm carries the same rank over its ≤arms
+  // survivors (its semantic re-rank and RRF fusion rank run on the
+  // driver, outside any plan).
   private val sinkWindowBudget = Map(
     "TextIndex.searchBm25" -> 1,
-    "Retrieval.hybridSearch" -> 3,
-    "Retrieval.hybridSearch.prepared" -> 3)
+    "Retrieval.hybridSearch.lexical" -> 1)
 
   // Audit mode additionally reveals the retraining compact's
   // hash-sample renumber window — bounded at IvfSampleCap (256) rows
   // by the preceding limit, reviewed in VectorIndex.retrainSample.
   private val sinkAuditWindowBudget = Map(
     "TextIndex.searchBm25" -> 1,
-    "Retrieval.hybridSearch" -> 3,
-    "Retrieval.hybridSearch.prepared" -> 3,
+    "Retrieval.hybridSearch.lexical" -> 1,
     "VectorIndex.compactRetrain.assign" -> 1,
     // the SAME ≤256-row retrainSample renumber window, over ONE cell's
     // members — but the split's sub-quantizer defaults to IvfIters=3

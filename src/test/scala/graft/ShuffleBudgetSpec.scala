@@ -716,14 +716,13 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   // Budgets recorded from the r9 plans; regenerate by reading the
   // failure message after an intentional change.
   private val sinkBudget = Map(
-    // hybridSearch: searchBm25's three (tf groupBy, df agg, doclens
-    // co-key) + the sem-arm TakeOrdered's single exchange; all other
-    // joins broadcast (one-row query vector, ≤arms candidate lists)
-    "Retrieval.hybridSearch" -> 4,
-    // warm form over the prepared handle: same composition with
-    // doclens/totals/centroids read from cache — caching changes the
-    // scan nodes, not the exchange count
-    "Retrieval.hybridSearch.prepared" -> 4,
+    // hybridSearch's two Spark-side scans (the rest of a lookup runs
+    // on the driver): the lexical arm is searchBm25's df agg and
+    // per-doc sum with the totals as literals (the doclens join
+    // broadcasts at this SF); the semantic candidate scan is one
+    // TakeOrdered over the cell-pruned postings, no exchange
+    "Retrieval.hybridSearch.lexical" -> 2,
+    "Retrieval.hybridSearch.semantic" -> 0,
     // the three index-backed EVAL paths: every shuffle operates on a
     // bounded relation (per-query candidate lists, ≤|queries|·fetch
     // rows) or is a postings-side hash join keyed by the partition
