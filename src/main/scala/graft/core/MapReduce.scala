@@ -2,6 +2,9 @@ package graft.core
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.Partitioner
 import org.apache.spark.sql.SparkSession
@@ -10,20 +13,36 @@ import org.apache.spark.sql.SparkSession
   * (`/root/reference/mr/worker.go:28-32` sorts on UTF-8 bytes; Scala's
   * default String ordering compares UTF-16 code units, which diverges for
   * supplementary-plane characters).
+  *
+  * The result is exactly `Arrays.compareUnsigned` over `getBytes(UTF_8)`,
+  * computed without allocating: the strings are compared `charAt` by
+  * `charAt`, because for BMP chars that are not surrogates UTF-16 order is
+  * code point order, which UTF-8 byte order preserves. When a surrogate
+  * sits at the first differing position it falls back to comparing the
+  * encoded bytes, so pairs and lone surrogates (encoded as `?`) order as
+  * `getBytes` orders them. A shared prefix that ends in a high surrogate
+  * needs no check of its own: it encodes differently on the two sides
+  * only when a low surrogate follows on one side, which is either a
+  * surrogate at the first differing position or, past the end of the
+  * shorter string, still orders the shorter string first (`?` = 0x3F
+  * sorts before a 4-byte lead byte).
   */
 object ByteOrdering extends Ordering[String] {
   def compare(a: String, b: String): Int = {
-    val x = a.getBytes(UTF_8)
-    val y = b.getBytes(UTF_8)
-    val n = math.min(x.length, y.length)
+    val n = math.min(a.length, b.length)
     var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) a.length - b.length
+    else {
+      val x = a.charAt(i)
+      val y = b.charAt(i)
+      if (Character.isSurrogate(x) || Character.isSurrogate(y)) bytewise(a, b)
+      else x - y
     }
-    x.length - y.length
   }
+
+  private def bytewise(a: String, b: String): Int =
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
 }
 
 /** Exact-fidelity partitioner: shard = fnv1a32(key) & 0x7fffffff % nReduce
@@ -46,8 +65,9 @@ final class Fnv1aPartitioner(val numPartitions: Int) extends Partitioner {
   * {{{
   * files → Map(filename, contents) → [(k,v)]       wholeTextFiles + flatMap
   *       → fnv1a(k) % nReduce shards               partitionBy(Fnv1aPartitioner)
-  *       → per-shard sort by k, group runs         in-partition sort + run scan
-  *       → Reduce(k, [v…])                         holistic UDAF per key
+  *       → per-shard group by k, keys in order     in-partition hash group +
+  *                                                 sort of the distinct keys
+  *       → Reduce(k, [v…])                         holistic reduce per key
   *       → "k v\n" lines in mr-out-<shard>         per-partition text sink
   * }}}
   *
@@ -95,7 +115,7 @@ object MapReduce {
     val written = pairs
       .partitionBy(new Fnv1aPartitioner(nReduce))
       .mapPartitionsWithIndex { (pid, it) =>
-        val lines = reducePartition(app, it)
+        val lines = reduceShard(app, it)
         if (lines.isEmpty) Iterator.empty
         else {
           // Write mr-out-<pid> like worker.go:182-199, via temp + rename so
@@ -118,44 +138,53 @@ object MapReduce {
     written.length
   }
 
-  /** Sequential golden oracle mirroring mrsequential.go:25-87: single
-    * global sort, single `mr-out-0`. Pure local Scala — no Spark — so
-    * engine tests compare a genuinely independent implementation.
+  /** Sequential golden oracle mirroring mrsequential.go:25-87: one
+    * global sort of every pair by key (`sort.Sort(ByKey)`), a scan of the
+    * runs of equal keys, single `mr-out-0`. Pure local Scala — no Spark,
+    * and none of `run`'s reduce side — so engine tests compare a genuinely
+    * independent implementation.
     */
   def runSequential(inputs: Seq[String], app: MRApp, outDir: String): Unit = {
-    val inter = inputs.flatMap { f =>
+    val inter = inputs.toVector.flatMap { f =>
       val contents = new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)), UTF_8)
       app.map(f, contents)
+    }.sortBy(_.key)(ByteOrdering)
+    val out = new StringBuilder
+    var i = 0
+    while (i < inter.length) {
+      val key = inter(i).key
+      var j = i + 1
+      while (j < inter.length && inter(j).key == key) j += 1
+      out ++= s"$key ${app.reduce(key, inter.slice(i, j).map(_.value))}\n"
+      i = j
     }
-    val lines = reducePartition(app, inter.iterator.map(kv => (kv.key, kv.value)))
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.write(dir.resolve("mr-out-0"),
-      lines.mkString.getBytes(UTF_8))
+      out.result().getBytes(UTF_8))
   }
 
-  /** Sort a shard by key (byte-wise, unstable is fine — per-key value
-    * order is unspecified, SURVEY.md §1.4), scan runs of equal keys, apply
-    * the holistic reduce, format `"%v %v\n"` (worker.go:181-201).
+  /** Reduce one shard: group its pairs by key in a hash map (values in
+    * arrival order), sort only the distinct keys byte-wise, apply the
+    * holistic reduce once per key in that order and format `"%v %v\n"`
+    * (worker.go:201). The reference sorts every pair (worker.go:181)
+    * because its intermediate data lives in files; a Spark reduce task
+    * already holds its whole shard in memory, so only the distinct keys
+    * need ordering.
     */
-  private def reducePartition(
+  private def reduceShard(
       app: MRApp, it: Iterator[(String, String)]): Seq[String] = {
-    val data = it.toArray
-    if (data.isEmpty) return Nil
-    scala.util.Sorting.stableSort(data,
-      (a: (String, String), b: (String, String)) =>
-        ByteOrdering.compare(a._1, b._1) < 0)
-    val outLines = Seq.newBuilder[String]
-    var i = 0
-    while (i < data.length) {
-      var j = i + 1
-      while (j < data.length && data(j)._1 == data(i)._1) j += 1
-      val values = java.util.Arrays.copyOfRange(data, i, j).map(_._2).toSeq
-      outLines += s"${data(i)._1} ${app.reduce(data(i)._1, values)}\n"
-      i = j
+    val groups = new java.util.HashMap[String, ArrayBuffer[String]]()
+    it.foreach { case (k, v) =>
+      groups.computeIfAbsent(k, _ => new ArrayBuffer[String]()) += v
     }
-    outLines.result()
+    val keys = groups.keySet.toArray(new Array[String](0))
+    java.util.Arrays.sort(keys, ByteOrdering)
+    ArraySeq.unsafeWrapArray(keys).map { k =>
+      val values = ArraySeq.unsafeWrapArray(groups.get(k).toArray)
+      s"$k ${app.reduce(k, values)}\n"
+    }
   }
 
   /** Shared scan+map stage, Map called with the caller's ORIGINAL path
@@ -170,6 +199,13 @@ object MapReduce {
     * splits, so a map task covers a split of ONE OR MORE whole files
     * (24 small files give 16-17 map tasks). A file is never divided,
     * but a task retry re-runs Map over every file in its split.
+    *
+    * NOTE: the packing stays on measurement. One map task per file, as
+    * `sc.union(inputs.map(wholeTextFiles(_, 1)))`, took a traced perfbench
+    * `mr-apps` pass (24 files, 4 cores) from 1.22 to 2.21 s at seed 5 and
+    * from 1.25 to 1.93 s at seed 6: `scheduler.gap_ms` rose from 156 to
+    * 908 ms and from 164 to 754 ms, the driver listing each file's RDD on
+    * its own, while the map stage itself gained only 0.05-0.13 s.
     */
   def mapStage(
       spark: SparkSession,

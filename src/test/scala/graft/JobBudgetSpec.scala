@@ -51,6 +51,8 @@ class JobBudgetSpec extends AnyFunSuite {
 
   private val lookupJobs = 6
 
+  private val mrJobs = 1
+
   /** Jobs started by `body`, with the listener bus drained on both
     * sides of the window. Checkpoint blocks it created are released
     * afterwards. */
@@ -101,5 +103,14 @@ class JobBudgetSpec extends AnyFunSuite {
         Seq("spark", "window", "merge"), q, nprobe = 4).collect())
       assert(n == lookupJobs, s"lookup: $n jobs (recorded $lookupJobs)")
     } finally handle.close()
+  }
+
+  test("MapReduce.run starts exactly its recorded jobs") {
+    val books = Seq("whale.txt", "garden.txt", "numbers.txt", "repeat.txt")
+      .map(f => TestSpark.resource(s"books/$f"))
+    val out = TestSpark.tmpDir("jobs-mr")
+    val n = jobsDuring(
+      core.MapReduce.run(spark, books, apps.WordCount, 10, out))
+    assert(n == mrJobs, s"MapReduce.run: $n jobs (recorded $mrJobs)")
   }
 }

@@ -3,7 +3,10 @@ package graft.core
 import graft.TestSpark
 import graft.functions.Fnv1a
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalacheck.{Prop, Test => SCTest}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 class Fnv1aSpec extends AnyFunSuite {
 
@@ -70,5 +73,46 @@ class Fnv1aSpec extends AnyFunSuite {
     assert(ByteOrdering.compare("abc", "abd") < 0)
     assert(ByteOrdering.compare("ab", "abc") < 0)
     assert(ByteOrdering.compare("b", "aa") > 0)
+  }
+
+  // One code point (or one lone surrogate) from a script class whose
+  // UTF-16 and UTF-8 orders agree (ASCII, Latin-1, Greek, CJK) or may
+  // not (U+E000-U+FFFF against supplementary pairs and lone surrogates).
+  private val piece: Gen[String] = Gen.oneOf(
+    Gen.choose(0x20, 0x7e), Gen.choose(0xa0, 0xff),
+    Gen.choose(0x391, 0x3c9), Gen.choose(0x4e00, 0x9fff),
+    Gen.choose(0xe000, 0xffff), Gen.choose(0x10000, 0x10ffff),
+    Gen.choose(0xd800, 0xdbff), Gen.choose(0xdc00, 0xdfff)
+  ).map(cp => new String(Character.toChars(cp)))
+
+  private val text: Gen[String] =
+    Gen.choose(0, 4).flatMap(Gen.listOfN(_, piece)).map(_.mkString)
+
+  // Two strings that share a prefix, which ends in a high surrogate
+  // about a third of the time, so a suffix opening with a low surrogate
+  // completes a pair on one side only.
+  private val pair: Gen[(String, String)] = for {
+    p0 <- text
+    high <- Gen.frequency(2 -> Gen.const(""),
+      1 -> Gen.choose(0xd800, 0xdbff).map(_.toChar.toString))
+    a <- text
+    b <- text
+  } yield (p0 + high + a, p0 + high + b)
+
+  test("property: byte ordering == unsigned compare of the UTF-8 bytes") {
+    // Labels name the strings by UTF-16 unit: a lone surrogate cannot
+    // pass through the test reporter's encoder.
+    def units(s: String) = s.map(c => f"${c.toInt}%04x").mkString("[", " ", "]")
+    val p = Prop.forAll(pair) { case (a, b) =>
+      (Integer.signum(ByteOrdering.compare(a, b)) ==
+        Integer.signum(java.util.Arrays.compareUnsigned(
+          a.getBytes(UTF_8), b.getBytes(UTF_8)))) :| s"${units(a)} ${units(b)}"
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(5000), p)
+    assert(res.passed, res.status match {
+      case SCTest.Failed(_, labels) => labels.mkString("; ")
+      case other => other.getClass.getSimpleName
+    })
   }
 }
