@@ -2,6 +2,7 @@ package graft.apps
 
 import graft.core.{KV, MRApp}
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.immutable.ArraySeq
 
 /** The reference's five application plugins (SURVEY.md §2.3) as Scala
   * MRApps with byte-for-byte output fidelity.
@@ -19,9 +20,25 @@ object WordCount extends MRApp {
   def reduce(key: String, values: Seq[String]): String =
     values.size.toString
 
-  /** strings.FieldsFunc(contents, !unicode.IsLetter) — wc.go:23-26. */
-  def tokenize(contents: String): Seq[String] =
-    contents.split("[^\\p{L}]+").toSeq.filter(_.nonEmpty)
+  /** strings.FieldsFunc(contents, !unicode.IsLetter) — wc.go:23-26: the
+    * maximal runs of letters, scanned by code point.
+    * `Character.isLetter` is exactly Java's `\p{L}`; a lone surrogate
+    * is not a letter, so it separates words.
+    */
+  def tokenize(contents: String): Seq[String] = {
+    val words = ArraySeq.newBuilder[String]
+    val n = contents.length
+    var start = -1
+    var i = 0
+    while (i < n) {
+      val cp = contents.codePointAt(i)
+      if (Character.isLetter(cp)) { if (start < 0) start = i }
+      else if (start >= 0) { words += contents.substring(start, i); start = -1 }
+      i += Character.charCount(cp)
+    }
+    if (start >= 0) words += contents.substring(start, n)
+    words.result()
+  }
 }
 
 /** Inverted index (`/root/reference/mrapps/indexer.go`): DISTINCT words

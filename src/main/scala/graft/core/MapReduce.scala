@@ -5,9 +5,14 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.Partitioner
+import com.esotericsoftware.kryo.io.{Input, Output}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.functions.Fnv1a
 
 /** Byte-wise string ordering matching Go's `<` on strings
   * (`/root/reference/mr/worker.go:28-32` sorts on UTF-8 bytes; Scala's
@@ -45,31 +50,26 @@ object ByteOrdering extends Ordering[String] {
     java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
 }
 
-/** Exact-fidelity partitioner: shard = fnv1a32(key) & 0x7fffffff % nReduce
-  * (`/root/reference/mr/worker.go:131-132`). Partition index == shard
-  * index, which plain `repartition(n, col)` does NOT guarantee (it murmurs
-  * the column again).
-  */
-final class Fnv1aPartitioner(val numPartitions: Int) extends Partitioner {
-  def getPartition(key: Any): Int =
-    graft.functions.Fnv1a.hash(key.asInstanceOf[String]) % numPartitions
-  override def equals(o: Any): Boolean = o match {
-    case p: Fnv1aPartitioner => p.numPartitions == numPartitions
-    case _ => false
-  }
-  override def hashCode: Int = numPartitions
-}
-
 /** The reference's 5-stage dataflow (SURVEY.md §1.1) on Spark:
   *
   * {{{
-  * files → Map(filename, contents) → [(k,v)]       wholeTextFiles + flatMap
-  *       → fnv1a(k) % nReduce shards               partitionBy(Fnv1aPartitioner)
-  *       → per-shard group by k, keys in order     in-partition hash group +
-  *                                                 sort of the distinct keys
+  * files → Map(filename, contents) → [(k,v)]       wholeTextFiles + per-task
+  *                                                 map, grouped by k
+  *       → fnv1a(k) % nReduce shards               one packed block per
+  *                                                 (map task, shard), shuffled
+  *                                                 by shard index
+  *       → per-shard group by k, keys in order     blocks decoded into a hash
+  *                                                 group + sort of the
+  *                                                 distinct keys
   *       → Reduce(k, [v…])                         holistic reduce per key
   *       → "k v\n" lines in mr-out-<shard>         per-partition text sink
   * }}}
+  *
+  * The shuffle follows the reference's intermediate layout: a map task
+  * writes one file per reduce bucket (`mr-X-Y`, worker.go:131-149), and
+  * here it writes one record per bucket, a block holding each of its
+  * keys once with that key's values (see `packShards`), rather than one
+  * shuffle record per pair.
   *
   * This compatibility shim intentionally keeps the reference's whole-file
   * input granularity and holistic reduce (one full value list in memory per
@@ -95,8 +95,6 @@ object MapReduce {
       outDir: String): Int = {
     require(inputs.nonEmpty, "no input files")
     val sc = spark.sparkContext
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      sc.hadoopConfiguration)
     val out = outDir
     // Clear stale mr-out-* from a previous run in the same dir — shards
     // that are empty (or out of range) this run would otherwise keep old
@@ -110,32 +108,39 @@ object MapReduce {
           .foreach(fs.delete(_, false))
       }
     }
-    val pairs = mapStage(spark, inputs, app)
-
-    val written = pairs
-      .partitionBy(new Fnv1aPartitioner(nReduce))
-      .mapPartitionsWithIndex { (pid, it) =>
-        val lines = reduceShard(app, it)
-        if (lines.isEmpty) Iterator.empty
-        else {
-          // Write mr-out-<pid> like worker.go:182-199, via temp + rename so
-          // task retries/speculation commit atomically (the reference gets
-          // this from the master's first-finish-wins dedup, master.go:214-217).
-          val dir = new Path(out)
-          val fs = dir.getFileSystem(hadoopConf.value)
-          fs.mkdirs(dir)
-          val tmp = new Path(dir,
-            s".mr-out-$pid.${java.util.UUID.randomUUID()}.tmp")
-          val os = fs.create(tmp, true)
-          try os.write(lines.mkString.getBytes(UTF_8)) finally os.close()
-          val dst = new Path(dir, s"mr-out-$pid")
-          if (fs.exists(dst)) fs.delete(dst, false)
-          fs.rename(tmp, dst)
-          Iterator.single(pid)
+    // Broadcast, so that a reduce task does not deserialize a whole
+    // Configuration from its closure.
+    val hadoopConf = sc.broadcast(new SerializableConfiguration(
+      sc.hadoopConfiguration))
+    try {
+      val written = files(spark, inputs)
+        .mapPartitions(packShards(app, _, nReduce))
+        // the identity on shard indexes 0 until nReduce
+        .partitionBy(new HashPartitioner(nReduce))
+        .mapPartitionsWithIndex { (pid, blocks) =>
+          val lines = reduceShard(app, blocks.map(_._2))
+          if (lines.isEmpty) Iterator.empty
+          else {
+            // Write mr-out-<pid> like worker.go:182-199, via temp + rename
+            // so task retries/speculation commit atomically (the reference
+            // gets this from the master's first-finish-wins dedup,
+            // master.go:214-217).
+            val dir = new Path(out)
+            val fs = dir.getFileSystem(hadoopConf.value.value)
+            fs.mkdirs(dir)
+            val tmp = new Path(dir,
+              s".mr-out-$pid.${java.util.UUID.randomUUID()}.tmp")
+            val os = fs.create(tmp, true)
+            try os.write(lines.mkString.getBytes(UTF_8)) finally os.close()
+            val dst = new Path(dir, s"mr-out-$pid")
+            if (fs.exists(dst)) fs.delete(dst, false)
+            fs.rename(tmp, dst)
+            Iterator.single(pid)
+          }
         }
-      }
-      .collect()
-    written.length
+        .collect()
+      written.length
+    } finally hadoopConf.destroy()
   }
 
   /** Sequential golden oracle mirroring mrsequential.go:25-87: one
@@ -165,19 +170,79 @@ object MapReduce {
       out.result().getBytes(UTF_8))
   }
 
-  /** Reduce one shard: group its pairs by key in a hash map (values in
-    * arrival order), sort only the distinct keys byte-wise, apply the
-    * holistic reduce once per key in that order and format `"%v %v\n"`
-    * (worker.go:201). The reference sorts every pair (worker.go:181)
-    * because its intermediate data lives in files; a Spark reduce task
-    * already holds its whole shard in memory, so only the distinct keys
-    * need ordering.
+  /** Map side of one task: apply `app.map` to each of the task's files,
+    * group the emitted pairs by key in a hash map (values in emission
+    * order, taken from the app's `KV`s) and pack the groups of each
+    * reduce shard `fnv1a(key) % nReduce` into one block. Returns
+    * `(shard, block)` for each shard that got a key, so a task shuffles
+    * at most `nReduce` records, like the reference's `mr-X-Y` files.
+    *
+    * A block is a sequence of groups, each written with Kryo's
+    * `Output`: the key, its value count, then its values, a run of equal
+    * consecutive values as the value and the run's length (a word
+    * count's values are one run of "1"). Kryo's string codec keeps lone
+    * surrogates and has no length limit, unlike `DataOutput.writeUTF`.
+    */
+  private def packShards(
+      app: MRApp,
+      files: Iterator[(String, String)],
+      nReduce: Int): Iterator[(Int, Array[Byte])] = {
+    val groups = new java.util.HashMap[String, ArrayBuffer[String]]()
+    files.foreach { case (file, contents) =>
+      app.map(file, contents).foreach { kv =>
+        groups.computeIfAbsent(kv.key, _ => new ArrayBuffer[String]()) +=
+          kv.value
+      }
+    }
+    val blocks = new Array[Output](nReduce)
+    groups.forEach { (key, values) =>
+      val shard = Fnv1a.hash(key) % nReduce
+      if (blocks(shard) == null) blocks(shard) = new Output(4096, -1)
+      val block = blocks(shard)
+      block.writeString(key)
+      block.writeVarInt(values.length, true)
+      var i = 0
+      while (i < values.length) {
+        val v = values(i)
+        var j = i + 1
+        while (j < values.length && values(j) == v) j += 1
+        block.writeString(v)
+        block.writeVarInt(j - i, true)
+        i = j
+      }
+    }
+    Iterator.range(0, nReduce).collect {
+      case shard if blocks(shard) != null => (shard, blocks(shard).toBytes)
+    }
+  }
+
+  /** Reduce one shard: decode its blocks, one per map task that had keys
+    * of this shard, into a hash map from key to values (each block's
+    * values in emission order, the blocks in arrival order), sort only
+    * the distinct keys byte-wise, apply the holistic reduce once per key
+    * in that order and format `"%v %v\n"` (worker.go:201). The reference
+    * sorts every pair (worker.go:181) because its intermediate data lives
+    * in files; a Spark reduce task already holds its whole shard in
+    * memory, so only the distinct keys need ordering.
     */
   private def reduceShard(
-      app: MRApp, it: Iterator[(String, String)]): Seq[String] = {
+      app: MRApp, blocks: Iterator[Array[Byte]]): Seq[String] = {
     val groups = new java.util.HashMap[String, ArrayBuffer[String]]()
-    it.foreach { case (k, v) =>
-      groups.computeIfAbsent(k, _ => new ArrayBuffer[String]()) += v
+    blocks.foreach { bytes =>
+      val block = new Input(bytes)
+      while (block.position < block.limit) {
+        val key = block.readString()
+        var n = block.readVarInt(true)
+        val values = groups.computeIfAbsent(key, _ => new ArrayBuffer[String]())
+        values.sizeHint(values.length + n)
+        while (n > 0) {
+          val v = block.readString()
+          val run = block.readVarInt(true)
+          var r = 0
+          while (r < run) { values += v; r += 1 }
+          n -= run
+        }
+      }
     }
     val keys = groups.keySet.toArray(new Array[String](0))
     java.util.Arrays.sort(keys, ByteOrdering)
@@ -187,11 +252,10 @@ object MapReduce {
     }
   }
 
-  /** Shared scan+map stage, Map called with the caller's ORIGINAL path
-    * string — the reference hands Map the CLI argument verbatim
-    * (mrsequential.go:49), while wholeTextFiles absolutizes, so resolved
-    * paths are mapped back. Used by both the exact-layout runner and the
-    * Catalyst-planned MRAggregators.runDataset.
+  /** The input files as `(path, contents)` records, one per file, with
+    * the path the caller gave: the reference hands Map the CLI argument
+    * verbatim (mrsequential.go:49), while wholeTextFiles absolutizes, so
+    * resolved paths are mapped back.
     *
     * Task granularity differs from the reference's one map task per
     * input file (master.go:289-296): `inputs.size` is only a minimum
@@ -207,20 +271,28 @@ object MapReduce {
     * 908 ms and from 164 to 754 ms, the driver listing each file's RDD on
     * its own, while the map stage itself gained only 0.05-0.13 s.
     */
-  def mapStage(
-      spark: SparkSession,
-      inputs: Seq[String],
-      app: MRApp): org.apache.spark.rdd.RDD[(String, String)] = {
+  private def files(
+      spark: SparkSession, inputs: Seq[String]): RDD[(String, String)] = {
     val nameMap = inputs
       .map(i => new java.io.File(i).getAbsolutePath -> i).toMap
     spark.sparkContext
       .wholeTextFiles(inputs.mkString(","), inputs.size)
-      .flatMap { case (uri, contents) =>
+      .map { case (uri, contents) =>
         val p = normalizePath(uri)
-        app.map(nameMap.getOrElse(p, p), contents)
-          .map(kv => (kv.key, kv.value))
+        (nameMap.getOrElse(p, p), contents)
       }
   }
+
+  /** The map stage as one `(key, value)` record per pair, for the
+    * Catalyst-planned `MRAggregators.runDataset`.
+    */
+  def mapStage(
+      spark: SparkSession,
+      inputs: Seq[String],
+      app: MRApp): RDD[(String, String)] =
+    files(spark, inputs).flatMap { case (file, contents) =>
+      app.map(file, contents).map(kv => (kv.key, kv.value))
+    }
 
   /** wholeTextFiles yields `file:/abs/path`; the reference passes the CLI
     * arg through untouched. Normalize to a plain filesystem path so app

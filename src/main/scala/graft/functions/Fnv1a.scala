@@ -26,8 +26,38 @@ object Fnv1a {
     h & 0x7fffffff
   }
 
-  def hash(s: String): Int =
-    hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  /** `hashBytes(s.getBytes(UTF_8))` without the byte array: the UTF-8
+    * encoding is hashed as it is produced. A surrogate pair hashes as its
+    * 4-byte code point and a lone surrogate as `?`, as `getBytes` writes
+    * it.
+    */
+  def hash(s: String): Int = {
+    var h = OffsetBasis
+    val n = s.length
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i).toInt
+      if (c < 0x80) h = (h ^ c) * Prime
+      else if (c < 0x800) {
+        h = (h ^ (0xc0 | (c >> 6))) * Prime
+        h = (h ^ (0x80 | (c & 0x3f))) * Prime
+      } else if (!Character.isSurrogate(c.toChar)) {
+        h = (h ^ (0xe0 | (c >> 12))) * Prime
+        h = (h ^ (0x80 | ((c >> 6) & 0x3f))) * Prime
+        h = (h ^ (0x80 | (c & 0x3f))) * Prime
+      } else if (Character.isHighSurrogate(c.toChar) && i + 1 < n &&
+          Character.isLowSurrogate(s.charAt(i + 1))) {
+        val cp = Character.toCodePoint(c.toChar, s.charAt(i + 1))
+        h = (h ^ (0xf0 | (cp >> 18))) * Prime
+        h = (h ^ (0x80 | ((cp >> 12) & 0x3f))) * Prime
+        h = (h ^ (0x80 | ((cp >> 6) & 0x3f))) * Prime
+        h = (h ^ (0x80 | (cp & 0x3f))) * Prime
+        i += 1
+      } else h = (h ^ '?') * Prime
+      i += 1
+    }
+    h & 0x7fffffff
+  }
 
   /** Column surface: `fnv1a(col)` — a native codegen'd Catalyst
     * expression, not a Scala UDF, so it stays inside whole-stage codegen.

@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftglue.Bus
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 /** Job-count regression net: the exact number of Spark jobs a query
@@ -37,6 +38,10 @@ import scala.jdk.CollectionConverters._
   * It started 12 while the query vector was checkpointed, the probe
   * cells were ranked by a Spark window, the totals were crossed in as
   * a relation and the fusion ran as a plan.
+  *
+  * `MapReduce.run` starts `mrJobs` jobs, and each of its map tasks
+  * shuffles at most one record per reduce shard: the shard's packed
+  * block, not one record per pair.
   */
 class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -53,25 +58,29 @@ class JobBudgetSpec extends AnyFunSuite {
 
   private val mrJobs = 1
 
-  /** Jobs started by `body`, with the listener bus drained on both
-    * sides of the window. Checkpoint blocks it created are released
-    * afterwards. */
-  private def jobsDuring(body: => Any): Int = {
+  /** Runs `body` with `listener` registered and the listener bus
+    * drained on both sides of the window. Checkpoint blocks it created
+    * are released afterwards. */
+  private def listening(listener: SparkListener)(body: => Any): Unit = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     Ckpt.releasingNew(sc) {
       Bus.drain(sc)
       sc.addSparkListener(listener)
       try {
         body
         Bus.drain(sc)
-        jobs.get()
       } finally sc.removeSparkListener(listener)
     }
+  }
+
+  /** Jobs started by `body`. */
+  private def jobsDuring(body: => Any): Int = {
+    val jobs = new AtomicInteger(0)
+    listening(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })(body)
+    jobs.get()
   }
 
   /** Jobs started by constructing and collecting query `name`. */
@@ -105,12 +114,32 @@ class JobBudgetSpec extends AnyFunSuite {
     } finally handle.close()
   }
 
-  test("MapReduce.run starts exactly its recorded jobs") {
-    val books = Seq("whale.txt", "garden.txt", "numbers.txt", "repeat.txt")
+  private def books: Seq[String] =
+    Seq("whale.txt", "garden.txt", "numbers.txt", "repeat.txt")
       .map(f => TestSpark.resource(s"books/$f"))
+
+  test("MapReduce.run starts exactly its recorded jobs") {
     val out = TestSpark.tmpDir("jobs-mr")
     val n = jobsDuring(
       core.MapReduce.run(spark, books, apps.WordCount, 10, out))
     assert(n == mrJobs, s"MapReduce.run: $n jobs (recorded $mrJobs)")
+  }
+
+  test("MapReduce.run shuffles at most one record per (map task, shard)") {
+    val nReduce = 10
+    val mapTasks = new AtomicInteger(0)
+    val records = new AtomicLong(0)
+    val out = TestSpark.tmpDir("shuffle-mr")
+    listening(new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskType == "ShuffleMapTask") {
+          mapTasks.incrementAndGet()
+          records.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        }
+    })(core.MapReduce.run(spark, books, apps.WordCount, nReduce, out))
+    val bound = mapTasks.get().toLong * nReduce
+    assert(mapTasks.get() > 0, "MapReduce.run ran no map task")
+    assert(records.get() <= bound, s"MapReduce.run wrote ${records.get()} " +
+      s"shuffle records from ${mapTasks.get()} map tasks (at most $bound)")
   }
 }

@@ -2,6 +2,7 @@ package graft.core
 
 import graft.TestSpark
 import graft.functions.Fnv1a
+import org.apache.spark.HashPartitioner
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
@@ -26,11 +27,12 @@ class Fnv1aSpec extends AnyFunSuite {
   }
 
   test("hash is non-negative and partitioner stays in range") {
+    // MapReduce.run shuffles a block to shard fnv1a(k) % n through
+    // HashPartitioner(n), which must be the identity on those indexes.
     check(Prop.forAll { (s: String, n0: Int) =>
       val n = math.abs(n0 % 64) + 1
       val h = Fnv1a.hash(s)
-      val p = new Fnv1aPartitioner(n).getPartition(s)
-      h >= 0 && p >= 0 && p < n && p == h % n
+      h >= 0 && new HashPartitioner(n).getPartition(h % n) == h % n
     })
   }
 
@@ -99,10 +101,19 @@ class Fnv1aSpec extends AnyFunSuite {
     b <- text
   } yield (p0 + high + a, p0 + high + b)
 
+  test("property: hash == hashBytes of the UTF-8 bytes") {
+    // `a` may end in a lone high surrogate, which `a + b` may complete.
+    val p = Prop.forAll(pair) { case (a, b) =>
+      Prop.all(Seq(a, a + b).map { s =>
+        (Fnv1a.hash(s) == Fnv1a.hashBytes(s.getBytes(UTF_8))) :| units(s)
+      }: _*)
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(5000), p)
+    assert(res.passed, failure(res))
+  }
+
   test("property: byte ordering == unsigned compare of the UTF-8 bytes") {
-    // Labels name the strings by UTF-16 unit: a lone surrogate cannot
-    // pass through the test reporter's encoder.
-    def units(s: String) = s.map(c => f"${c.toInt}%04x").mkString("[", " ", "]")
     val p = Prop.forAll(pair) { case (a, b) =>
       (Integer.signum(ByteOrdering.compare(a, b)) ==
         Integer.signum(java.util.Arrays.compareUnsigned(
@@ -110,9 +121,16 @@ class Fnv1aSpec extends AnyFunSuite {
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(5000), p)
-    assert(res.passed, res.status match {
-      case SCTest.Failed(_, labels) => labels.mkString("; ")
-      case other => other.getClass.getSimpleName
-    })
+    assert(res.passed, failure(res))
+  }
+
+  // Labels name the strings by UTF-16 unit, which reads better than the
+  // raw text when it holds lone surrogates.
+  private def units(s: String) =
+    s.map(c => f"${c.toInt}%04x").mkString("[", " ", "]")
+
+  private def failure(res: SCTest.Result): String = res.status match {
+    case SCTest.Failed(_, labels) => labels.mkString("; ")
+    case other => other.getClass.getSimpleName
   }
 }

@@ -2,6 +2,8 @@ package graft.core
 
 import graft.TestSpark
 import graft.apps.{FaultInjected, Indexer, NoCrash, WordCount}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -121,6 +123,46 @@ class MapReduceSpec extends AnyFunSuite {
     assert(got.toMap == tally.map { case (w, n) => w -> n.toString }.toMap)
   }
 
+  /** Emits what a packed shuffle block must carry intact: keys and values
+    * with lone surrogates (next to a surrogate pair), empty keys and
+    * values, a value over 64 KiB and long runs of equal values broken by
+    * other values. Some keys occur in every file, so several map tasks
+    * pack them. Reduce reports each distinct value by length, UTF-16 hash
+    * and multiplicity, so a value that changes in transit changes the
+    * output even where the sink encodes it as `?`. */
+  private object EdgeValues extends MRApp {
+    val name = "edge-values"
+    private val hi = "\uD800"
+    private val lo = "\uDC00"
+    private val smile = "\uD83D\uDE00"
+    def map(file: String, contents: String): Seq[KV] = {
+      val f = new java.io.File(file).getName.stripSuffix(".txt")
+      val n = contents.length
+      Seq(KV("hi" + hi, "lo" + lo), KV(lo + "z", hi), KV(smile, smile + lo),
+        KV("", ""), KV("", f), KV(f, ""), KV(f + hi, lo + f),
+        KV("big", "x" * 70000 + hi + f)) ++
+        Seq.fill(3000 + n)(KV("run", "same")) ++
+        Seq(KV("run", "other"), KV("run", "")) ++
+        Seq.fill(2000)(KV("run", "same")) ++
+        Seq.tabulate(500)(i => KV(s"alt$f", if (i % 3 == 2) "b" else "a"))
+    }
+    def reduce(key: String, values: Seq[String]): String =
+      values.groupBy(identity).toSeq
+        .map { case (v, vs) => s"${v.length}.${v.hashCode}x${vs.size}" }
+        .sorted.mkString(s"${values.size} ", ",", "")
+  }
+
+  test("packed shuffle carries surrogates, empty and 64 KiB values, runs") {
+    val dOut = TestSpark.tmpDir("mr-edge-values-dist")
+    MapReduce.run(spark, books, EdgeValues, 3, dOut)
+    checkLayout(dOut, 3)
+    val sOut = TestSpark.tmpDir("mr-edge-values-seq")
+    MapReduce.runSequential(books, EdgeValues, sOut)
+    val (dist, seq) = (MapReduce.readOutput(dOut), MapReduce.readOutput(sOut))
+    assert(dist.size == seq.size)
+    assert(dist.toMap == seq.toMap)
+  }
+
   test("empty input file contributes nothing; empty shards produce no file") {
     val out = TestSpark.tmpDir("mr-empty")
     // Single tiny file with 2 distinct words -> at most 2 of 10 shards
@@ -149,5 +191,28 @@ class MapReduceSpec extends AnyFunSuite {
   test("unicode tokenization: digits/punct separate, letters kept") {
     val words = WordCount.tokenize("one1two22three333 naïve-café 日本語!")
     assert(words == Seq("one", "two", "three", "naïve", "café", "日本語"))
+  }
+
+  test("property: code-point tokenizer == regex split on non-letters") {
+    // ASCII, Latin-1, CJK and supplementary letters; combining marks
+    // (Mn, not letters), digits, punctuation, spaces and lone surrogates.
+    val piece: Gen[String] = Gen.oneOf(
+      Gen.choose(0x61, 0x7a), Gen.choose(0xc0, 0xff),
+      Gen.choose(0x4e00, 0x9fff), Gen.choose(0x20000, 0x2a6df),
+      Gen.choose(0x300, 0x36f), Gen.choose(0x30, 0x39),
+      Gen.oneOf(0x20, 0x21, 0x2c, 0x2d, 0x2e, 0x3b, 0x5f, 0x0a),
+      Gen.choose(0xd800, 0xdfff)
+    ).map(cp => new String(Character.toChars(cp)))
+    val text = Gen.choose(0, 24).flatMap(Gen.listOfN(_, piece)).map(_.mkString)
+    val p = Prop.forAll(text) { s =>
+      (WordCount.tokenize(s) ==
+        s.split("[^\\p{L}]+").toSeq.filter(_.nonEmpty)) :| cps(s)
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(5000), p)
+    assert(res.passed, res.status match {
+      case SCTest.Failed(_, labels) => labels.mkString("; ")
+      case other => other.getClass.getSimpleName
+    })
   }
 }
