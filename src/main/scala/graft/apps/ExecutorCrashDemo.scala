@@ -2,80 +2,62 @@ package graft.apps
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.{KV, MRApp, MapReduce}
+
 /** Process-level crash fidelity. The reference's crash app kills the
   * whole WORKER PROCESS (`/root/reference/mrapps/crash.go:24`,
   * `os.Exit(1)`), while [[FaultInjected]] injects task-level
   * exceptions — same recovery semantics, smaller blast radius. This
   * demo closes that gap on a `local-cluster[2,2,1024]` standalone
-  * cluster (real executor JVMs, not threads) with two scenarios, both
-  * of which must converge to the uncrashed result:
+  * cluster (real executor JVMs, not threads): it runs word count
+  * through `MapReduce.run` over the input files named on its command
+  * line, in two scenarios that each halt one executor JVM, and each
+  * must write exactly `MapReduce.runSequential`'s output:
   *
-  *  1. MAP-stage kill: the first attempt of one partition halts its
-  *     ENTIRE executor JVM (`Runtime.halt` — no shutdown hooks, exactly
-  *     `os.Exit`), taking every concurrently running task with it; the
-  *     Worker relaunches the executor and lost tasks reschedule (C3
+  *  1. MAP-stage kill: the first `map` call halts its ENTIRE executor
+  *     JVM (`Runtime.halt` — no shutdown hooks, exactly `os.Exit`),
+  *     taking every concurrently running map task with it; the Worker
+  *     relaunches the executor and lost tasks reschedule (C3
   *     re-execution + C5 first-finish-wins, SURVEY.md §2.2).
-  *  2. REDUCE-stage kill: the executor dies AFTER producing map output,
-  *     destroying its local shuffle files (the analog of the
-  *     reference's worker-local mr-* intermediates); the retried
-  *     reducer hits FetchFailed and the DAGScheduler must RESUBMIT the
-  *     already-finished map stage (C8 — re-execution of completed work
-  *     after output loss), the hardest recovery path.
+  *  2. REDUCE-stage kill: the first `reduce` call halts its executor
+  *     AFTER the map output exists, destroying its local shuffle files
+  *     (the analog of the reference's worker-local mr-* intermediates);
+  *     a reducer that fetches from it hits FetchFailed and the
+  *     DAGScheduler must RESUBMIT the finished map stage (C8 —
+  *     re-execution of completed work after output loss).
   *
   * Runs as a separate main (driven by ExecutorCrashSpec via a child
   * process) because a JVM hosts at most one SparkContext and the test
   * suites share a `local[4,4]` session. Exits 0 on success, 2 on a
-  * result mismatch, 3 on watchdog timeout (e.g. executors never
-  * launched).
+  * result mismatch or a scenario whose halt never happened, 3 on
+  * watchdog timeout (e.g. executors never launched).
   */
 object ExecutorCrashDemo {
 
-  /** Named Serializable function (NOT a lambda): executor-side
-    * deserialization of Scala lambdas via extraClassPath hits
-    * SerializedLambda/classloader mismatches on a standalone cluster; a
-    * plain class round-trips cleanly. Partition 3's first attempt
-    * (marker-file CAS) halts the whole executor JVM.
+  /** `app`, except that the first call of `map` (or, with `inReduce`,
+    * of `reduce`) anywhere on the cluster halts its executor JVM. The
+    * marker file on the local FS, visible to both executor JVMs (same
+    * host), makes that exactly one halt, so the job terminates just as
+    * crash.go's probabilistic exits eventually let it.
     */
-  private final class CrashThenDouble(marker: String)
-      extends ((Int, Iterator[Int]) => Iterator[Long]) with Serializable {
-    def apply(pid: Int, it: Iterator[Int]): Iterator[Long] = {
-      if (pid == 3 && new java.io.File(marker).createNewFile()) {
-        // Kill the executor JVM mid-job — not just this task.
-        Runtime.getRuntime.halt(1)
-      }
-      it.map(_.toLong * 2)
+  private final class HaltOnce(app: MRApp, marker: String, inReduce: Boolean)
+      extends MRApp {
+    def name: String = app.name
+    def map(file: String, contents: String): Seq[KV] = {
+      if (!inReduce) haltOnce()
+      app.map(file, contents)
     }
-  }
-
-  /** Reduce-side kill: halting an executor AFTER the map stage also
-    * destroys the shuffle files it served (local-disk shuffle, like the
-    * reference's worker-local mr-* intermediates, SURVEY.md §1.3).
-    * Recovery needs more than task retry: the retried reducer hits
-    * FetchFailed and the DAGScheduler must RESUBMIT the finished map
-    * stage (C8 — re-execution of completed work after output loss).
-    */
-  private final class CrashReducer(marker: String)
-      extends ((Int, Iterator[(Long, Long)]) => Iterator[(Long, Long)])
-      with Serializable {
-    def apply(pid: Int, it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-      if (pid == 0 && new java.io.File(marker).createNewFile()) {
-        Runtime.getRuntime.halt(1)
-      }
-      it
+    def reduce(key: String, values: Seq[String]): String = {
+      if (inReduce) haltOnce()
+      app.reduce(key, values)
     }
-  }
-
-  private final class ModKey(groups: Int)
-      extends (Int => (Long, Long)) with Serializable {
-    def apply(x: Int): (Long, Long) = (x.toLong % groups, x.toLong)
-  }
-
-  private final class SumLong
-      extends ((Long, Long) => Long) with Serializable {
-    def apply(a: Long, b: Long): Long = a + b
+    private def haltOnce(): Unit =
+      if (new java.io.File(marker).createNewFile()) Runtime.getRuntime.halt(1)
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: ExecutorCrashDemo <input...>")
+    val inputs = args.toSeq
     // Watchdog: local-cluster failures manifest as a hang (job waits
     // forever for executor resources) — convert that to a clean exit 3.
     val watchdog = new Thread(() => {
@@ -86,12 +68,7 @@ object ExecutorCrashDemo {
     watchdog.setDaemon(true)
     watchdog.start()
 
-    // First-attempt marker on the local FS, visible to both executor
-    // JVMs (same host): guarantees exactly one kill, so the job
-    // terminates just like crash.go's probabilistic exits eventually do.
-    val marker = java.nio.file.Files.createTempDirectory("graft-crash")
-      .resolve("killed").toString
-
+    val tmp = java.nio.file.Files.createTempDirectory("graft-crash")
     val spark = SparkSession.builder()
       .master("local-cluster[2,2,1024]")
       .appName("graft-executor-crash")
@@ -105,44 +82,27 @@ object ExecutorCrashDemo {
           .map(p => new java.io.File(p).getAbsolutePath)
           .mkString(java.io.File.pathSeparator))
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8")
       .getOrCreate()
     try {
-      val sc = spark.sparkContext
-      val n = 100000
-
-      // Scenario 1: executor killed mid-MAP (result stage) — lost
-      // running tasks reschedule onto the relaunched executor.
-      val expected = (1 to n).map(_.toLong * 2).sum
-      val result = sc.parallelize(1 to n, 8)
-        .mapPartitionsWithIndex(new CrashThenDouble(marker))
-        .collect()
-        .sum
-      if (result != expected) {
-        System.err.println(s"[executor-crash] MAP MISMATCH: $result != $expected")
-        spark.stop(); sys.exit(2)
+      val golden = tmp.resolve("seq").toString
+      MapReduce.runSequential(inputs, WordCount, golden)
+      val expected = MapReduce.readOutput(golden).sorted
+      Seq("map" -> false, "reduce" -> true).foreach { case (stage, inReduce) =>
+        val marker = tmp.resolve(s"$stage-killed").toFile
+        val out = tmp.resolve(stage).toString
+        MapReduce.run(spark, inputs,
+          new HaltOnce(WordCount, marker.getPath, inReduce), outDir = out)
+        val got = MapReduce.readOutput(out).sorted
+        if (!marker.exists || got != expected) {
+          System.err.println(s"[executor-crash] $stage-stage FAILED: " +
+            s"halted=${marker.exists}, ${got.size} pairs, " +
+            s"runSequential ${expected.size}")
+          spark.stop(); sys.exit(2)
+        }
+        println(s"[executor-crash] $stage-stage kill recovered: " +
+          s"${got.size} pairs == runSequential")
       }
-      println(s"[executor-crash] map-stage OK: $result == $expected")
-
-      // Scenario 2: executor killed mid-REDUCE, after its map output was
-      // produced — the retried reducer FetchFails against the dead
-      // executor's shuffle files and the map stage must be resubmitted.
-      val marker2 = marker + "-reduce"
-      val groups = 16
-      val expected2 = (1 to n).map(_.toLong).groupBy(_ % groups)
-        .view.mapValues(_.sum).values.toSeq.sorted
-      val result2 = sc.parallelize(1 to n, 8)
-        .map(new ModKey(groups))
-        .reduceByKey(new SumLong, 8)
-        .mapPartitionsWithIndex(new CrashReducer(marker2),
-          preservesPartitioning = true)
-        .values.collect().toSeq.sorted
-      if (result2 != expected2) {
-        System.err.println(s"[executor-crash] REDUCE MISMATCH: $result2")
-        spark.stop(); sys.exit(2)
-      }
-      println("[executor-crash] OK: reduce-stage kill recovered " +
-        "(map output re-executed) and map-stage kill recovered")
+      println("[executor-crash] OK")
       spark.stop()
       sys.exit(0)
     } catch {

@@ -5,19 +5,26 @@ package graft.core
   * `main/mrworker.go` collapse to one Spark driver — SURVEY.md §3.2):
   *
   * {{{
-  * sbt "runMain graft.core.MRMain <app> <outDir> <input...> [--seq] [--nreduce N]"
+  * sbt "runMain graft.core.MRMain <app> <outDir> <input...> [--seq] [--nreduce=N]"
   * }}}
   *
   * `<app>` is a registry name (wc | indexer | nocrash) replacing the
   * reference's `.so` plugin argument. `--seq` runs the single-process
   * sequential oracle (mr-out-0); default is the distributed engine
   * (mr-out-0..nReduce-1, nReduce defaults to 10 like mrmaster.go:23).
+  * Any other flag, `--nreduce N` included, is rejected with the usage
+  * message before a session starts.
   */
 object MRMain {
+  private val usage =
+    "usage: MRMain <app> <outDir> <input...> [--seq] [--nreduce=N]"
+
   def main(args: Array[String]): Unit = {
     val (flags, pos) = args.partition(_.startsWith("--"))
-    require(pos.length >= 3,
-      "usage: MRMain <app> <outDir> <input...> [--seq] [--nreduce=N]")
+    flags.find(f => f != "--seq" && !f.startsWith("--nreduce="))
+      .foreach(f => throw new IllegalArgumentException(
+        s"unknown flag $f; $usage"))
+    require(pos.length >= 3, usage)
     val app = MRApp.byName(pos(0))
     val outDir = pos(1)
     // expand filename *-globs on LOCAL paths: sbt's runner passes them
@@ -54,25 +61,11 @@ object MRMain {
     val seq = flags.contains("--seq")
     val nReduce = flags.collectFirst {
       case f if f.startsWith("--nreduce=") => f.stripPrefix("--nreduce=").toInt
-    }.getOrElse(10)
+    }.getOrElse(MapReduce.DefaultNReduce)
 
     if (seq) {
       MapReduce.runSequential(inputs, app, outDir)
       println(s"wrote ${outDir}/mr-out-0")
-    } else if (flags.contains("--dataset")) {
-      // Catalyst-planned path: typed HolisticReduce aggregation instead
-      // of the exact-layout shim; one "key value" line per pair, single
-      // unsorted output (fidelity layout stays with the default path).
-      val spark = graft.Sessions.local("graft-mr-ds", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      val out = MRAggregators.runDataset(spark, inputs, app)
-      val rows = out.collect().sortBy(_._1)(ByteOrdering)
-      val dir = java.nio.file.Paths.get(outDir)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.write(dir.resolve("mr-out-0"),
-        rows.map { case (k, v) => s"$k $v\n" }.mkString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"wrote ${rows.length} pairs to $outDir/mr-out-0 (dataset path)")
-      spark.stop()
     } else {
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
       val spark = graft.Sessions.local("graft-mr", cpus)

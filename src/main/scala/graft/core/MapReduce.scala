@@ -9,7 +9,7 @@ import com.esotericsoftware.kryo.io.{Input, Output}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.Fnv1a
@@ -71,6 +71,13 @@ object ByteOrdering extends Ordering[String] {
   * keys once with that key's values (see `packShards`), rather than one
   * shuffle record per pair.
   *
+  * `packShards` and `reduceShard` are the only distributed formulation
+  * of the engine. `run` drives them over files with an RDD shuffle and
+  * the text sink; `dataset` drives the same two functions over a
+  * Dataset of `(name, contents)` rows, with the shuffle planned as a
+  * Catalyst exchange, for the SQL-facing queries (q42/q43 in
+  * `MRQueries`, hash-checked against DuckDB).
+  *
   * This compatibility shim intentionally keeps the reference's whole-file
   * input granularity and holistic reduce (one full value list in memory per
   * key — the reference does the same, worker.go:160-181). It is the
@@ -83,6 +90,9 @@ object ByteOrdering extends Ordering[String] {
   */
 object MapReduce {
 
+  /** The reference's default reduce shard count (mrmaster.go:23). */
+  val DefaultNReduce = 10
+
   /** Distributed run: writes `mr-out-<p>` for each non-empty shard into
     * `outDir` (empty shards produce no file — master.go:256-259 elides
     * them too). Returns the number of output files written.
@@ -91,9 +101,10 @@ object MapReduce {
       spark: SparkSession,
       inputs: Seq[String],
       app: MRApp,
-      nReduce: Int = 10,
+      nReduce: Int = DefaultNReduce,
       outDir: String): Int = {
     require(inputs.nonEmpty, "no input files")
+    require(nReduce > 0, s"nReduce must be positive, got $nReduce")
     val sc = spark.sparkContext
     val out = outDir
     // Clear stale mr-out-* from a previous run in the same dir — shards
@@ -118,8 +129,8 @@ object MapReduce {
         // the identity on shard indexes 0 until nReduce
         .partitionBy(new HashPartitioner(nReduce))
         .mapPartitionsWithIndex { (pid, blocks) =>
-          val lines = reduceShard(app, blocks.map(_._2))
-          if (lines.isEmpty) Iterator.empty
+          val pairs = reduceShard(app, blocks.map(_._2))
+          if (pairs.isEmpty) Iterator.empty
           else {
             // Write mr-out-<pid> like worker.go:182-199, via temp + rename
             // so task retries/speculation commit atomically (the reference
@@ -131,7 +142,8 @@ object MapReduce {
             val tmp = new Path(dir,
               s".mr-out-$pid.${java.util.UUID.randomUUID()}.tmp")
             val os = fs.create(tmp, true)
-            try os.write(lines.mkString.getBytes(UTF_8)) finally os.close()
+            val text = pairs.iterator.map { case (k, v) => s"$k $v\n" }
+            try os.write(text.mkString.getBytes(UTF_8)) finally os.close()
             val dst = new Path(dir, s"mr-out-$pid")
             if (fs.exists(dst)) fs.delete(dst, false)
             fs.rename(tmp, dst)
@@ -141,6 +153,24 @@ object MapReduce {
         .collect()
       written.length
     } finally hadoopConf.destroy()
+  }
+
+  /** The engine over a Dataset of `(name, contents)` rows, one row per
+    * input "file": each partition packs its shards as a map task of
+    * `run` does, the blocks are grouped by shard index in a Catalyst
+    * exchange, and each shard is reduced by `reduceShard`. Returns the
+    * `(key, value)` rows of every shard, each shard's keys in byte order.
+    * The shard count is the reference's default, `DefaultNReduce`.
+    */
+  def dataset(
+      docs: Dataset[(String, String)],
+      app: MRApp): Dataset[(String, String)] = {
+    docs
+      .mapPartitions(packShards(app, _, DefaultNReduce))(
+        Encoders.tuple(Encoders.scalaInt, Encoders.BINARY))
+      .groupByKey(_._1)(Encoders.scalaInt)
+      .flatMapGroups((_, blocks) => reduceShard(app, blocks.map(_._2)))(
+        Encoders.tuple(Encoders.STRING, Encoders.STRING))
   }
 
   /** Sequential golden oracle mirroring mrsequential.go:25-87: one
@@ -219,14 +249,15 @@ object MapReduce {
   /** Reduce one shard: decode its blocks, one per map task that had keys
     * of this shard, into a hash map from key to values (each block's
     * values in emission order, the blocks in arrival order), sort only
-    * the distinct keys byte-wise, apply the holistic reduce once per key
-    * in that order and format `"%v %v\n"` (worker.go:201). The reference
+    * the distinct keys byte-wise and apply the holistic reduce once per
+    * key in that order, giving the shard's `(key, value)` pairs, which
+    * `run` writes as `"%v %v\n"` lines (worker.go:201). The reference
     * sorts every pair (worker.go:181) because its intermediate data lives
     * in files; a Spark reduce task already holds its whole shard in
     * memory, so only the distinct keys need ordering.
     */
   private def reduceShard(
-      app: MRApp, blocks: Iterator[Array[Byte]]): Seq[String] = {
+      app: MRApp, blocks: Iterator[Array[Byte]]): Seq[(String, String)] = {
     val groups = new java.util.HashMap[String, ArrayBuffer[String]]()
     blocks.foreach { bytes =>
       val block = new Input(bytes)
@@ -248,7 +279,7 @@ object MapReduce {
     java.util.Arrays.sort(keys, ByteOrdering)
     ArraySeq.unsafeWrapArray(keys).map { k =>
       val values = ArraySeq.unsafeWrapArray(groups.get(k).toArray)
-      s"$k ${app.reduce(k, values)}\n"
+      (k, app.reduce(k, values))
     }
   }
 
@@ -283,22 +314,11 @@ object MapReduce {
       }
   }
 
-  /** The map stage as one `(key, value)` record per pair, for the
-    * Catalyst-planned `MRAggregators.runDataset`.
-    */
-  def mapStage(
-      spark: SparkSession,
-      inputs: Seq[String],
-      app: MRApp): RDD[(String, String)] =
-    files(spark, inputs).flatMap { case (file, contents) =>
-      app.map(file, contents).map(kv => (kv.key, kv.value))
-    }
-
   /** wholeTextFiles yields `file:/abs/path`; the reference passes the CLI
     * arg through untouched. Normalize to a plain filesystem path so app
     * output (indexer doc lists, crash filenames) matches the oracle.
     */
-  def normalizePath(uri: String): String = {
+  private def normalizePath(uri: String): String = {
     if (uri.startsWith("file:")) new java.net.URI(uri).getPath else uri
   }
 

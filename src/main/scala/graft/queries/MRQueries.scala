@@ -2,37 +2,29 @@ package graft.queries
 
 import graft.{QDef, Tables}
 import graft.apps.{Indexer, WordCount}
-import graft.core.{KV, MRApp}
-import graft.core.MRAggregators.HolisticReduce
+import graft.core.{MRApp, MapReduce}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
 /** The MR-compatibility layer under the driver's DuckDB oracle: the
-  * actual MRApp map/reduce implementations run as Catalyst-planned
-  * aggregations over `documents` rows (doc_id stands in for the file
-  * name, text for the contents — the engine's whole-file record model,
-  * SURVEY.md §1.2). This closes the loop: the same code golden-tested
+  * MRApp map/reduce implementations run through the engine's own map
+  * and reduce sides (`MapReduce.dataset`: `packShards`, a Catalyst
+  * exchange on the shard index, `reduceShard`) over `documents` rows
+  * (doc_id stands in for the file name, text for the contents — the
+  * engine's whole-file record model, SURVEY.md §1.2). This closes the
+  * loop: the code that `MapReduce.run` runs and that is golden-tested
   * against the sequential oracle is also hash-checked against SQL.
   */
 object MRQueries {
 
-  /** Run an MRApp over (doc_id-as-name, text) records via the holistic
-    * Aggregator; output is the reference's (key, value) string pairs.
+  /** Run an MRApp over (doc_id-as-name, text) records; output is the
+    * reference's (key, value) string pairs.
     */
   private def runApp(s: SparkSession, dir: String, app: MRApp): DataFrame = {
-    implicit val kvEnc: org.apache.spark.sql.Encoder[KV] =
-      org.apache.spark.sql.Encoders.product[KV]
-    implicit val bufEnc: org.apache.spark.sql.Encoder[(String, List[String])] =
-      org.apache.spark.sql.Encoders.kryo[(String, List[String])]
-    val reduce = udaf(new HolisticReduce(app))
-    Tables(s, dir).documents
-      .select(col("doc_id").cast("string").as("name"), col("text"))
-      .as[(String, String)](org.apache.spark.sql.Encoders
-        .tuple(org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.STRING))
-      .flatMap { case (name, text) => app.map(name, text) }
-      .groupBy(col("key"))
-      .agg(reduce(col("key"), col("value")).as("value"))
+    val docs = Tables(s, dir).documents
+      .select(col("doc_id").cast("string"), col("text"))
+      .as[(String, String)](Encoders.tuple(Encoders.STRING, Encoders.STRING))
+    MapReduce.dataset(docs, app).toDF("key", "value")
   }
 
   /** DuckDB restatement of WordCount.tokenize (wc.go:23-26): split on

@@ -29,6 +29,11 @@ import scala.jdk.CollectionConverters._
   *  - q248_bpe_compression: 39, same elided argmax barrier as q247.
   *  - q256_bpe_oov_audit: 55, applying its 8 learned merges to the
   *    held-out vocab in ONE broadcast pass, not 8 applyMerge barriers.
+  *  - q42_mrapp_wordcount: 3, running `MapReduce.dataset`: the parquet
+  *    schema job of reading `documents`, the map-side job of the one
+  *    shard exchange (adaptive execution runs it as its own query
+  *    stage) and the job of the reduce side.
+  *  - q43_mrapp_indexer: 3, the same `MapReduce.dataset` plan as q42.
   *
   * One prepared hybrid lookup (`Retrieval.hybridSearchPrepared` over a
   * handle on the sf0.001 documents and embeddings, k = 16, nprobe = 4,
@@ -41,7 +46,8 @@ import scala.jdk.CollectionConverters._
   *
   * `MapReduce.run` starts `mrJobs` jobs, and each of its map tasks
   * shuffles at most one record per reduce shard: the shard's packed
-  * block, not one record per pair.
+  * block, not one record per pair. q42's map tasks, which run the same
+  * `packShards` through `MapReduce.dataset`, are held to the same bound.
   */
 class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -52,7 +58,9 @@ class JobBudgetSpec extends AnyFunSuite {
     "q209_abtt_rerank" -> 26,
     "q247_bpe_fertility" -> 41,
     "q248_bpe_compression" -> 39,
-    "q256_bpe_oov_audit" -> 55)
+    "q256_bpe_oov_audit" -> 55,
+    "q42_mrapp_wordcount" -> 3,
+    "q43_mrapp_indexer" -> 3)
 
   private val lookupJobs = 6
 
@@ -125,21 +133,33 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(n == mrJobs, s"MapReduce.run: $n jobs (recorded $mrJobs)")
   }
 
-  test("MapReduce.run shuffles at most one record per (map task, shard)") {
-    val nReduce = 10
+  /** Asserts that `body` runs map tasks and that they write at most
+    * `nReduce` shuffle records each. */
+  private def assertPackedShuffle(what: String, nReduce: Int)(
+      body: => Any): Unit = {
     val mapTasks = new AtomicInteger(0)
     val records = new AtomicLong(0)
-    val out = TestSpark.tmpDir("shuffle-mr")
     listening(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         if (t.taskType == "ShuffleMapTask") {
           mapTasks.incrementAndGet()
           records.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
         }
-    })(core.MapReduce.run(spark, books, apps.WordCount, nReduce, out))
+    })(body)
     val bound = mapTasks.get().toLong * nReduce
-    assert(mapTasks.get() > 0, "MapReduce.run ran no map task")
-    assert(records.get() <= bound, s"MapReduce.run wrote ${records.get()} " +
+    assert(mapTasks.get() > 0, s"$what ran no map task")
+    assert(records.get() <= bound, s"$what wrote ${records.get()} " +
       s"shuffle records from ${mapTasks.get()} map tasks (at most $bound)")
+  }
+
+  test("MapReduce.run shuffles at most one record per (map task, shard)") {
+    val out = TestSpark.tmpDir("shuffle-mr")
+    assertPackedShuffle("MapReduce.run", 10)(
+      core.MapReduce.run(spark, books, apps.WordCount, 10, out))
+  }
+
+  test("q42 shuffles at most one record per (map task, shard)") {
+    assertPackedShuffle("q42_mrapp_wordcount", core.MapReduce.DefaultNReduce)(
+      SparkEntry.queries("q42_mrapp_wordcount")(spark, dir).collect())
   }
 }

@@ -1,43 +1,10 @@
 package graft.core
 
 import graft.TestSpark
-import graft.apps.{Indexer, NoCrash, WordCount}
 import org.scalatest.funsuite.AnyFunSuite
 
 class AggregatorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def books: Seq[String] =
-    Seq("whale.txt", "garden.txt", "numbers.txt", "repeat.txt")
-      .map(f => TestSpark.resource(s"books/$f"))
-
-  private def oracle(app: MRApp): Map[String, String] = {
-    val dir = TestSpark.tmpDir(s"agg-oracle-${app.name}")
-    MapReduce.runSequential(books, app, dir)
-    MapReduce.readOutput(dir).toMap
-  }
-
-  test("HolisticReduce aggregator == sequential oracle (wc, indexer, nocrash)") {
-    Seq(WordCount, Indexer, NoCrash).foreach { app =>
-      val got = MRAggregators.runDataset(spark, books, app).collect().toMap
-      assert(got == oracle(app), app.name)
-    }
-  }
-
-  test("combinable WordCount aggregator (map-side combine) == holistic path") {
-    import spark.implicits._
-    val holistic = MRAggregators.runDataset(spark, books, WordCount)
-      .collect().toMap
-    val combined = spark.sparkContext
-      .wholeTextFiles(books.mkString(","), books.size)
-      .flatMap { case (uri, c) =>
-        WordCount.map(MapReduce.normalizePath(uri), c) }
-      .toDS()
-      .groupByKey(_.key)
-      .agg(MRAggregators.WordCountCombining.toColumn.name("value"))
-      .collect().toMap
-    assert(combined == holistic)
-  }
 
   test("fnv1a registered as a SQL function via SparkSessionExtensions") {
     val r = spark.sql(

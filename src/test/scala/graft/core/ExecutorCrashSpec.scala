@@ -3,32 +3,33 @@ package graft.core
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives [[graft.apps.ExecutorCrashDemo]] in a child JVM: an executor
-  * JVM is halted mid-job on a real local-cluster (process blast radius,
-  * matching crash.go's os.Exit) and the job must still produce the
-  * uncrashed result. A child process is required because this JVM
+  * JVM is halted inside `MapReduce.run`, once mid map stage and once mid
+  * reduce stage, on a real local-cluster (process blast radius, matching
+  * crash.go's os.Exit), and each run must still write the sequential
+  * oracle's output. A child process is required because this JVM
   * already hosts the shared local[4,4] test SparkContext.
   */
 class ExecutorCrashSpec extends AnyFunSuite {
 
+  private def inputs: Seq[String] =
+    Seq("books/whale.txt", "books/garden.txt", "books/numbers.txt",
+      "books/repeat.txt", "edge/empty.txt", "edge/unicode.txt",
+      "edge/hotkey.txt").map(graft.TestSpark.resource)
+
   test("executor JVM kill mid-job recovers to the uncrashed result") {
     val javaBin = s"${sys.props("java.home")}/bin/java"
-    // Spark-on-JDK17 module opens for the child driver JVM. Passed
-    // explicitly (single-arg form) rather than copied from this JVM's
-    // runtime args: under sbt the pair-form flags are not reliably
-    // visible via RuntimeMXBean, and a missing java.nio open fails
-    // Kryo's HeapByteBuffer registration only once a shuffle runs.
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).map(p => s"--add-opens=$p=ALL-UNNAMED")
+    // Spark-on-JDK17 module opens for the child driver JVM: build.sbt's
+    // own list, handed to this JVM as one property. Passed explicitly
+    // rather than copied from this JVM's runtime args: under sbt those
+    // flags are not reliably visible via RuntimeMXBean, and a missing
+    // java.nio open fails Kryo's HeapByteBuffer registration only once
+    // a shuffle runs.
+    val addOpens = sys.props.get("graft.jdk17AddOpens")
+      .getOrElse(fail("graft.jdk17AddOpens is not set (see build.sbt)"))
+      .split(" ").toSeq
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx2g", "-cp", sys.props("java.class.path"),
-      "graft.apps.ExecutorCrashDemo")
+      "graft.apps.ExecutorCrashDemo") ++ inputs
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_HOME", "/opt/spark")
     // The in-JVM standalone Worker builds executor commands through the
@@ -42,6 +43,8 @@ class ExecutorCrashSpec extends AnyFunSuite {
     assert(finished == 0,
       s"ExecutorCrashDemo exited $finished; last output:\n" +
         out.linesIterator.toSeq.takeRight(40).mkString("\n"))
+    assert(out.contains("[executor-crash] map-stage kill recovered"))
+    assert(out.contains("[executor-crash] reduce-stage kill recovered"))
     assert(out.contains("[executor-crash] OK"))
   }
 }

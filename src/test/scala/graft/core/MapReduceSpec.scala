@@ -4,6 +4,7 @@ import graft.TestSpark
 import graft.apps.{FaultInjected, Indexer, NoCrash, WordCount}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
+import org.apache.spark.sql.Encoders
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -49,6 +50,41 @@ class MapReduceSpec extends AnyFunSuite {
     assert(dist.toMap == seq.toMap)
     // reduce output: sorted, space-joined values per key, 4 keys a..d
     assert(dist.map(_._1).sorted == Seq("a", "b", "c", "d"))
+  }
+
+  test("Dataset form == sequential oracle (wc, indexer, nocrash; books + edge)") {
+    val inputs = books ++ edge
+    val docs = spark.createDataset(inputs.map { f =>
+      (f, new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f)), UTF_8))
+    })(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+    Seq(WordCount, Indexer, NoCrash).foreach { app =>
+      val sOut = TestSpark.tmpDir(s"mr-${app.name}-ds-seq")
+      MapReduce.runSequential(inputs, app, sOut)
+      val got = MapReduce.dataset(docs, app).collect().toSeq
+      assert(got.sorted == MapReduce.readOutput(sOut).sorted, app.name)
+    }
+  }
+
+  test("run rejects a non-positive nReduce") {
+    Seq(0, -1).foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        MapReduce.run(spark, books, WordCount, n, TestSpark.tmpDir("mr-n"))
+      }
+      assert(e.getMessage.contains("nReduce"), e.getMessage)
+    }
+  }
+
+  test("MRMain rejects flags other than --seq and --nreduce=N") {
+    val in = TestSpark.resource("books/repeat.txt")
+    Seq(Seq("--nreduce", "5"), Seq("--bogus")).foreach { flags =>
+      val out = TestSpark.tmpDir("mr-main-flags")
+      val e = intercept[IllegalArgumentException] {
+        MRMain.main((Seq("wc", out, in) ++ flags).toArray)
+      }
+      assert(e.getMessage.contains("usage: MRMain"), e.getMessage)
+      assert(new java.io.File(out).list().isEmpty)
+    }
   }
 
   /** A key by code point, safe for the test reporter's encoder. */
